@@ -13,9 +13,6 @@ import scala.collection.concurrent.TrieMap
   * Usage: SPARK_GRAFT_SF_DIR=... sbt "runMain graft.ProfJobs <query...>"
   */
 object ProfJobs {
-  private final case class JobRec(id: Int, t0: Long, var t1: Long = -1L,
-      name: String = "", var desc: String = "")
-
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ProfJobs <queryName> [more...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

@@ -15,7 +15,7 @@ import org.apache.spark.sql.types._
   *   batch=<uuid>/bucket_ts=<baseTS>/part-*.parquet
   *
   * Each put publishes ONE batch dir with one filesystem rename (see
-  * publishBatch — the ACID seam), while bucket_ts stays a discovered
+  * [[Publish]] — the ACID seam), while bucket_ts stays a discovered
   * partition column, so time-range predicates are still metadata-only
   * partition pruning and RemoveBefore is still a partition drop. Row
   * schema:
@@ -95,7 +95,7 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     * partitions, returns the per-reason ledger (the batch analog of
     * the reference's per-call error returns — a distributed engine
     * surfaces rejects as data, it cannot throw per row). */
-  // Each put publishes its own staging dir (no shared committer
+  // Each put publishes its own batch dir (no shared committer
   // _temporary), so concurrent writers — even cross-JVM — cannot
   // corrupt each other. The local lock only serializes this
   // instance's put/compact jobs so they don't contend for executor
@@ -105,14 +105,14 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
   // ------------------------------------------------------------------
   // Cross-JVM single-writer lease (destructive verbs only)
   // ------------------------------------------------------------------
-  // `put` stays lease-free: appends publish invisible uuid staging
-  // dirs with one rename each, so concurrent appenders — even
-  // cross-JVM — cannot corrupt each other (the comment above). The
+  // `put` stays lease-free: each append publishes a fresh uuid batch
+  // dir, so concurrent appenders — even cross-JVM — cannot corrupt
+  // each other (the comment above). The
   // verbs that DELETE or SWAP existing dirs (removeBefore, compact*,
   // erase, rollback, rebucket, import/applyDelta, the rollup and
   // vector-index maintenance family) have no such immunity: two JVMs
-  // interleaving their staging sweeps can delete each other's
-  // in-flight work (the healVindex hazard). They run under a
+  // interleaving their heals and swaps can delete each other's
+  // in-flight work. They run under a
   // fail-closed lease file:
   //
   //   <tablePath>/_graft_writer_lease = "<holderUuid>\n<heartbeatMs>"
@@ -122,15 +122,11 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
   // goes stale mid-verb no matter how long the verb runs. A second
   // writer finding a FRESH lease throws err_writer_conflict; a STALE
   // one (heartbeat older than writerLeaseTtlMs — a crashed writer)
-  // is stolen. With this in place the age-gated staging sweeps
-  // (sweepStaleStaging, the vbuild sweep) are belt-and-suspenders
-  // rather than the only cross-JVM guard.
+  // is stolen.
 
   private val writerUuid = java.util.UUID.randomUUID().toString
   private[graft] def writerUuidForTest: String = writerUuid
   private def writerLeasePath = new Path(s"${opts.tablePath}/_graft_writer_lease")
-  private def writerLeaseTmpPath =
-    new Path(s"${opts.tablePath}/_graft_writer_lease.tmp.$writerUuid")
   private var leaseDepth = 0 // guarded by writeLock (verbs compose: erase → cascades)
   // Fencing state for the CURRENT hold. `leaseLost` flips true when the
   // heartbeat observes a foreign uuid (or a vanished file) — our hold
@@ -160,29 +156,15 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     final case class Held(uuid: String, ts: Long, token: Long) extends State
   }
 
-  /** Publish lease content atomically: fully write + close a per-writer
-    * temp file, then rename onto the lease path. A concurrent readLease
-    * can never observe a truncated/empty body (the old create-truncate-
-    * write pattern left exactly that window, which parsed to None and
-    * took the steal path against a live holder — fail-open). On the
-    * local FS rename atomically replaces an existing file (heartbeat
-    * refresh); on HDFS rename-onto-existing fails, so `replaceExisting`
-    * falls back to delete+rename — readers catching that sub-ms
-    * missing-file window take the claim path and lose the claim race,
-    * never the steal path. Returns false if the rename lost. */
-  private def writeLease(fs: FileSystem, token: Long, replaceExisting: Boolean): Boolean = {
-    val tmp = writerLeaseTmpPath
-    val out = fs.create(tmp, true)
-    try out.write(s"$writerUuid\n${System.currentTimeMillis()}\n$token\n".getBytes("UTF-8"))
-    finally out.close()
-    var ok = fs.rename(tmp, writerLeasePath)
-    if (!ok && replaceExisting) {
-      try fs.delete(writerLeasePath, false) catch { case _: java.io.IOException => () }
-      ok = fs.rename(tmp, writerLeasePath)
-    }
-    if (!ok) try fs.delete(tmp, false) catch { case _: java.io.IOException => () }
-    ok
-  }
+  /** Publish lease content as a whole file ([[Publish.file]]), so a
+    * concurrent readLease never parses a truncated body as a missing
+    * lease and steals from a live holder. `replaceExisting` is the
+    * heartbeat refresh; readers catching its HDFS delete+rename window
+    * take the claim path and lose the claim race, never the steal
+    * path. Returns false if the rename lost. */
+  private def writeLease(fs: FileSystem, token: Long, replaceExisting: Boolean): Boolean =
+    Publish.file(fs, writerLeasePath,
+      s"$writerUuid\n${System.currentTimeMillis()}\n$token\n", replaceExisting)
 
   private def readLease(fs: FileSystem): Lease.State =
     try {
@@ -273,8 +255,8 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
         s"with $WriterConflict")
   }
 
-  /** Fencing check at destructive publish points (trash/swap renames,
-    * staging sweeps): refuses once the heartbeat observed this hold was
+  /** Fencing check at destructive publish points (swaps, heals,
+    * deletes): refuses once the heartbeat observed this hold was
     * lost. Cheap — a volatile read; the heartbeat thread is the lease
     * reader, every ttl/4. */
   private def assertLeaseHeld(): Unit =
@@ -369,7 +351,7 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     * manifest is immutable once written. */
   private def ensureManifest(adopt: Boolean): Unit = {
     if (manifestChecked) return
-    val fs = FileSystem.get(new java.net.URI(opts.dataDir), spark.sparkContext.hadoopConfiguration)
+    val fs = tableFs
 
     def validateExisting(): Boolean = {
       if (!fs.exists(manifestPath)) return false
@@ -394,21 +376,25 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
 
     if (validateExisting()) return
     if (!adopt) return // pure read of a pre-manifest (or empty) table: nothing to check, nothing to write
-    // Write path on a manifest-less table: adopt the current options.
-    // Temp-file + rename, then REVALIDATE what is actually on disk —
-    // POSIX rename replaces an existing destination, so two racing
-    // first-contact writers cannot both silently "win": whichever
-    // manifest survives is re-read, and the loser fails the validate.
+    // Write path on a manifest-less table. Heal first: a crash in the
+    // middle of rebucket's swap leaves the table root in trash, and
+    // adopting here would recreate an empty root in its place.
+    heal()
+    if (validateExisting()) return
+    // Adopt the current options, then REVALIDATE what is actually on
+    // disk — POSIX rename replaces an existing destination, so two
+    // racing first-contact writers cannot both silently "win":
+    // whichever manifest survives is re-read, and the loser fails the
+    // validate.
     if (!fs.exists(new Path(opts.tablePath)) && !fs.mkdirs(new Path(opts.tablePath)))
       throw new IllegalStateException(s"could not create table dir ${opts.tablePath}")
-    val tmp = new Path(s"${opts.tablePath}/._graft_options_${java.util.UUID.randomUUID().toString.replace("-", "")}")
-    val out = fs.create(tmp, true)
-    try out.write(layoutProps.map { case (k, v) => s"$k=$v" }.mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-    if (!fs.rename(tmp, manifestPath)) fs.delete(tmp, false) // another writer won the rename
+    Publish.file(fs, manifestPath, manifestBody(layoutProps), replace = false)
     if (!validateExisting())
       throw new IllegalStateException(s"could not publish options manifest $manifestPath")
   }
+
+  private def manifestBody(props: Seq[(String, Long)]): String =
+    props.map { case (k, v) => s"$k=$v" }.mkString("", "\n", "\n")
 
   /** The closed set of reasons [[classify]] can emit — the single-pass
     * ledger below enumerates them up front instead of discovering them
@@ -418,124 +404,86 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
 
   private def putClassified(classified: DataFrame): Map[String, Long] = {
     // ONE pass for ledger AND write (r15, guide §1.2 step 1 / §1.4):
-    // the ledger used to be a driver collect over a persisted copy of
-    // the whole batch — a full extra materialization per put. Now the
-    // write job itself carries a CollectMetrics (observe) node BELOW
-    // the accept filter, so per-reason counts (a closed set) and the
-    // accepted rows' min seq ride the single scan. Single evaluation
-    // also closes the nondeterministic-source hazard the old persist
-    // existed for. The batch stages invisibly first and is only
-    // renamed into place when the metrics show accepted rows, so an
-    // all-rejected batch still publishes NOTHING.
+    // the write job itself carries a CollectMetrics (observe) node
+    // BELOW the accept filter, so per-reason counts (a closed set) and
+    // the accepted rows' min seq ride the single scan, and a
+    // nondeterministic source is evaluated once. The batch publishes
+    // only when the metrics show accepted rows.
     val obs = new org.apache.spark.sql.Observation()
     val ledgerMetrics = putReasons.map(r =>
       count(when(col("reason") === r, 1)).as(s"n_$r")) :+
       min(when(col("reason") === Ok, col("seq"))).as("min_ok_seq")
     val observed = classified.observe(obs, ledgerMetrics.head, ledgerMetrics.tail: _*)
-    locally {
-      val accepted = observed.filter(col("reason") === Ok)
-      val projected = accepted.select(
-        col("slot_ns") +:
-          tagCols.zipWithIndex.map { case (n, i) => element_at(col("tags"), i + 1).as(n) } :+
-          col("payload") :+ col("seq") :+ col("bucket_ts"): _*)
-      // Cluster rows by bucket before writing: without this, every
-      // ingest task appends its own tiny file to EVERY bucket dir
-      // (tasks × buckets small files per batch — the classic
-      // write-amplification bug that quietly destroys read latency).
-      // One shuffle keyed by bucket → ~filesPerBucket files per bucket
-      // per batch; a series-hash subkey spreads bulk backfills over
-      // multiple writer tasks per bucket when configured.
-      val keyed =
-        if (opts.filesPerBucket <= 1) projected.repartition(col("bucket_ts"))
-        else projected.repartition(col("bucket_ts"),
-          pmod(hash(tagCols.map(col): _*), lit(opts.filesPerBucket)))
-      // Cluster rows by (series, slot) WITHIN each writer task: parquet
-      // row-group min/max stats then prune single-series gets on fresh
-      // ingest files, not just post-compaction rewrites (compaction
-      // keeps its role of folding many batch files into one clustered
-      // set). Leading with bucket_ts satisfies the file writer's own
-      // partition-column sort requirement, so this is the ONLY sort —
-      // the writer won't re-sort and the secondary order survives.
-      val clustered = keyed.sortWithinPartitions(
-        (col("bucket_ts") +: tagCols.map(col)) :+ col("slot_ns"): _*)
-      val staging = stageBatch(clustered)
-      val m = obs.get
-      // AQE's runtime empty-relation propagation replaces a subtree
-      // whose materialized stage produced 0 rows — taking the
-      // CollectMetrics node with it, so the observation resolves to
-      // an EMPTY map. That only happens when the accepted side was
-      // runtime-empty (all-rejected or empty batch, which published
-      // nothing), and the ledger still owes the caller its reject
-      // counts — recompute them with the classic pass; rare by
-      // construction, and nothing observable depends on the batch
-      // being evaluated twice because nothing was written.
-      val ledger =
-        if (m.contains(s"n_$Ok"))
-          putReasons.flatMap { r =>
-            val n = m(s"n_$r").asInstanceOf[Long]
-            if (n > 0L) Some(r -> n) else None
-          }.toMap
-        else classified.groupBy(col("reason")).count()
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      if (ledger.getOrElse(Ok, 0L) > 0L) {
-        // A write whose seq lands AT or BELOW the receipt chain's
-        // watermark changes what that watermark resolves to (explicit
-        // seqs are a supported ingest path) — break the chain so the
-        // next exportDelta recomputes in full. The min rode the write
-        // job's metrics; only consulted while a chain state exists.
-        readReceiptState().foreach { case (w, _, _) =>
-          m.get("min_ok_seq").flatMap(Option(_)).foreach { mn =>
-            if (mn.asInstanceOf[Long] <= w) invalidateReceiptState()
-          }
+    val accepted = observed.filter(col("reason") === Ok)
+    val projected = accepted.select(
+      col("slot_ns") +:
+        tagCols.zipWithIndex.map { case (n, i) => element_at(col("tags"), i + 1).as(n) } :+
+        col("payload") :+ col("seq") :+ col("bucket_ts"): _*)
+    // Cluster rows by bucket before writing: without this, every
+    // ingest task appends its own tiny file to EVERY bucket dir
+    // (tasks × buckets small files per batch — the classic
+    // write-amplification bug that quietly destroys read latency).
+    // One shuffle keyed by bucket → ~filesPerBucket files per bucket
+    // per batch; a series-hash subkey spreads bulk backfills over
+    // multiple writer tasks per bucket when configured.
+    val keyed =
+      if (opts.filesPerBucket <= 1) projected.repartition(col("bucket_ts"))
+      else projected.repartition(col("bucket_ts"),
+        pmod(hash(tagCols.map(col): _*), lit(opts.filesPerBucket)))
+    // Cluster rows by (series, slot) WITHIN each writer task: parquet
+    // row-group min/max stats then prune single-series gets on fresh
+    // ingest files, not just post-compaction rewrites (compaction
+    // keeps its role of folding many batch files into one clustered
+    // set). Leading with bucket_ts satisfies the file writer's own
+    // partition-column sort requirement, so this is the ONLY sort —
+    // the writer won't re-sort and the secondary order survives.
+    val clustered = keyed.sortWithinPartitions(
+      (col("bucket_ts") +: tagCols.map(col)) :+ col("slot_ns"): _*)
+    val m = Publish.observed(tableFs, newBatchPath()) { p =>
+      writeBatch(clustered, p); obs.get
+    } { m =>
+      val ok = m(s"n_$Ok").asInstanceOf[Long] > 0L
+      // A write whose seq lands AT or BELOW the receipt chain's
+      // watermark changes what that watermark resolves to (explicit
+      // seqs are a supported ingest path) — break the chain so the
+      // next exportDelta recomputes in full. Only consulted while a
+      // chain state exists.
+      if (ok) readReceiptState().foreach { case (w, _, _) =>
+        Option(m("min_ok_seq")).foreach { mn =>
+          if (mn.asInstanceOf[Long] <= w) invalidateReceiptState()
         }
-        publishStaged(staging)
-      } else tableFs.delete(staging, true) // all rejected: publish nothing
-      ledger
+      }
+      ok
     }
+    if (m.nonEmpty)
+      putReasons.flatMap { r =>
+        val n = m(s"n_$r").asInstanceOf[Long]
+        if (n > 0L) Some(r -> n) else None
+      }.toMap
+    else
+      // The metrics are absent only when the accepted side was runtime-
+      // empty, so nothing was published: the write job provably
+      // accepted nothing. The caller is still owed its reject counts;
+      // a second evaluation may classify differently (nondeterministic
+      // source), so whatever it calls Ok is forced to 0.
+      classified.groupBy(col("reason")).count()
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap - Ok
   }
 
-  /** Crash-atomic batch publish — the engine's ACID story (the
-    * reference's headline claim, README.md:5, which it gets from
-    * mmap + positional overwrite). Each batch is written under a
-    * hidden staging dir (invisible to readers — Spark skips dot
-    * files), then published with ONE filesystem rename into
-    * `batch=<uuid>/bucket_ts=<ns>/…`. Consequences:
-    *  - a crash mid-write leaves only an invisible staging dir (swept
-    *    by the next compaction) — readers can never observe a partial
-    *    batch, unlike a committer appending into shared partition dirs;
-    *  - concurrent writers (even cross-JVM) never collide: no shared
-    *    _temporary, each publishes its own batch dir;
-    *  - bucket_ts stays a partition column (batch is just one more
-    *    discovered level), so time pruning is unchanged.
-    * On object stores without atomic rename, swap this seam for a
-    * manifest-based table format (Delta/Iceberg) — the rest of the
-    * engine is unchanged. Returns the published batch dir. */
-  private def publishBatch(rows: DataFrame): Path =
-    publishStaged(stageBatch(rows))
+  /** A fresh batch dir `batch=<uuid>` — the unit every table write
+    * publishes ([[Publish]]: staged invisibly, then ONE rename). Readers
+    * can never observe a partial batch, concurrent writers (even
+    * cross-JVM) never collide, and bucket_ts stays a discovered
+    * partition column, so time pruning is unchanged. */
+  private def newBatchPath(): Path =
+    new Path(s"${opts.tablePath}/batch=${java.util.UUID.randomUUID().toString.replace("-", "")}")
 
-  /** Write a bucket-partitioned batch into an INVISIBLE staging dir
-    * (readers skip dot files) — the first half of [[publishBatch]],
-    * split out so single-pass verbs can run the write job, inspect its
-    * observed metrics, and only then decide to publish or discard. */
-  private def stageBatch(rows: DataFrame): Path = {
-    val uuid = java.util.UUID.randomUUID().toString.replace("-", "")
-    val staging = new Path(s"${opts.tablePath}/.staging_$uuid")
-    rows.write.mode(SaveMode.Overwrite).partitionBy("bucket_ts").parquet(staging.toString)
-    staging
-  }
+  private def writeBatch(rows: DataFrame, dir: Path): Unit =
+    rows.write.mode(SaveMode.Overwrite).partitionBy("bucket_ts").parquet(dir.toString)
 
-  /** Publish a staged batch dir with ONE rename — the ACID seam. */
-  private def publishStaged(staging: Path): Path = {
-    val fs = FileSystem.get(new java.net.URI(opts.dataDir), spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new Path(opts.tablePath))
-    val uuid = staging.getName.stripPrefix(".staging_")
-    val target = new Path(s"${opts.tablePath}/batch=$uuid")
-    if (!fs.rename(staging, target)) {
-      fs.delete(staging, true)
-      throw new IllegalStateException(s"batch publish failed: could not rename $staging")
-    }
-    target
-  }
+  /** Publish `rows` as one new batch. */
+  private def publishBatch(rows: DataFrame): Unit =
+    Publish.dir(tableFs, newBatchPath())(writeBatch(rows, _))
 
   /** Batch ingest with ENGINE-ALLOCATED seqs: `points` carries only
     * (ts, tags, payload); every row gets a fresh seq from the same
@@ -601,6 +549,9 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
   private val seqCounter = new java.util.concurrent.atomic.AtomicLong(-1L)
   private def nextSeqBlock(n: Long): Long = {
     if (seqCounter.get() < 0L) {
+      // a write's first contact: heal and adopt before seeding, or a
+      // table root a crashed rebucket left in trash would read as empty
+      writeLock.synchronized(ensureManifest(adopt = true))
       val row = table().agg(max(col("seq"))).head()
       val start = if (row.isNullAt(0)) 0L else row.getLong(0) + 1L
       seqCounter.compareAndSet(-1L, start)
@@ -815,8 +766,7 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     * analog of the reference's rm -rf, and a metadata-only partition
     * drop under a table format. */
   // writeLock: the ANN-index cascade below stages/swaps index dirs and
-  // must not interleave with refresh/compact's own staging (the
-  // healVindex mutation discipline)
+  // must not interleave with refresh/compact's own staging
   def removeBefore(ts: Long): Unit = mutate {
     ensureManifest(adopt = false) // destructive: a mismatched reopen must not compute the hot-window guard from wrong options
     val now = clock.nowNs
@@ -825,6 +775,7 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     if (ts > minHot)
       throw new IllegalArgumentException("err_remove_hot_bucket")
     invalidateReceiptState() // dropped buckets change what past watermarks resolve to
+    heal()
     // ANN-index cascade FIRST: a crash between the steps then leaves
     // the index missing rows the caller had already declared doomed
     // (under-serving, fixed by re-running the retention) rather than a
@@ -835,7 +786,7 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     // and those must leave the index too (they sit below the index
     // watermark, so no refresh would ever correct a miss here)
     filterVectorIndex(_ => floorBucket(col("slot_ns")) < ts)
-    val fs = FileSystem.get(new java.net.URI(opts.dataDir), spark.sparkContext.hadoopConfiguration)
+    val fs = tableFs
     val root = new Path(opts.tablePath)
     if (!fs.exists(root)) return
     assertLeaseHeld() // fence: partition drops begin
@@ -971,7 +922,7 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     *
     * Crash-safe by construction under the atomic-batch layout:
     *  1. enumerate the bucket's dirs across committed batches;
-    *  2. publish the LWW rewrite as a NEW batch (atomic rename);
+    *  2. publish the LWW rewrite as a NEW batch;
     *  3. delete exactly the enumerated source dirs.
     * Every crash window leaves either the originals, or originals +
     * compacted copy — duplicate rows, which the LWW resolve renders
@@ -981,7 +932,7 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     * safe too: a batch published after step 1 is not in the
     * enumeration, so step 3 cannot delete it. The engine writeLock
     * still serializes local put/compact so the two jobs don't contend
-    * for resources, and stale crash-era staging dirs are swept here.
+    * for resources, and the verb starts with a [[heal]].
     *
     * Known race (availability, not correctness): a concurrent reader
     * that planned its scan over the source files before step 3 fails
@@ -996,8 +947,8 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     // tag columns and collapse distinct series before deleting sources
     ensureManifest(adopt = false)
     invalidateReceiptState() // compaction drops superseded versions past watermarks still resolve
-    val fs = FileSystem.get(new java.net.URI(opts.dataDir), spark.sparkContext.hadoopConfiguration)
-    sweepStaleStaging(fs)
+    heal()
+    val fs = tableFs
     val sources = bucketDirs(fs, baseTs)
     if (sources.isEmpty) return (0L, 0L)
     // r15 single-pass: the before/after row counts (the return value)
@@ -1011,7 +962,7 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
       .option("basePath", opts.tablePath)
       .parquet(sources.map(_.toString): _*)
       .drop("batch", "bucket_ts")
-      .observe(obsBefore, count(lit(1)).as("n"))
+      .observe(obsBefore, count(lit(1)).as("before"))
     // Cluster the rewritten bucket by (series, slot): parquet row-group
     // min/max stats on the tag columns then actually prune — a Get for
     // one series reads ~one row group instead of scanning the bucket.
@@ -1019,24 +970,28 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     // sort, and the agg's hash partitioning is left untouched.
     val compacted = lwwAgg(scan, tagCols.map(col) :+ col("slot_ns"))
       .select(col("slot_ns") +: tagCols.map(col) :+ col("payload") :+ col("seq"): _*)
-      .observe(obsAfter, count(lit(1)).as("n"))
+      .observe(obsAfter, count(lit(1)).as("after"))
       .sortWithinPartitions((tagCols.map(col) :+ col("slot_ns")): _*)
       .withColumn("bucket_ts", lit(baseTs))
-    publishBatch(compacted)
-    // 0-row buckets can lose metrics to AQE empty-relation
-    // propagation — which itself proves the count is 0
-    val before = obsBefore.get.get("n").map(_.asInstanceOf[Long]).getOrElse(0L)
-    val afterRows = obsAfter.get.get("n").map(_.asInstanceOf[Long]).getOrElse(0L)
+    // absent metrics (a 0-row bucket) publish nothing and prove 0
+    val m = Publish.observed(fs, newBatchPath()) { p =>
+      writeBatch(compacted, p); obsBefore.get ++ obsAfter.get
+    }(_ => true)
     assertLeaseHeld() // fence: irreversible from here (source deletes)
-    sources.foreach { p =>
+    dropBucketDirs(fs, sources)
+    (m.getOrElse("before", 0L).asInstanceOf[Long], m.getOrElse("after", 0L).asInstanceOf[Long])
+  }
+
+  /** Delete committed bucket dirs, and each batch dir left without a
+    * bucket. */
+  private def dropBucketDirs(fs: FileSystem, dirs: Seq[Path]): Unit =
+    dirs.foreach { p =>
       fs.delete(p, true)
       val parent = p.getParent
       if (fs.exists(parent) &&
         fs.listStatus(parent).forall(!_.getPath.getName.startsWith("bucket_ts=")))
         fs.delete(parent, true)
     }
-    (before, afterRows)
-  }
 
   /** Maintenance sweep: compact every bucket that has left the hot
     * window (mirrors the reference's hot→cold transition,
@@ -1071,15 +1026,12 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     * Survivor rows are rewritten verbatim (raw seq history kept — no
     * LWW resolution happens here, so a later compaction behaves
     * identically); a bucket left empty loses its partition like
-    * retention. Rollup deltas are filtered in place via
-    * staging + two-rename swap, preserving each delta's seq-range
-    * NAME — the watermark chain stays intact because those seqs WERE
-    * folded; the erased series simply no longer contributes rows.
-    * Crash contract: between the two renames the delta is briefly
-    * absent and [[rollupCover]] fails loudly; the next erase() call
-    * SELF-HEALS by renaming the `.erase_trash_<deltaName>` dir back
-    * (and sweeps stale trash/staging). A crash before the swap
-    * leaves the delta untouched and an invisible staging dir.
+    * retention. Rollup deltas are filtered in place by a [[Publish]]
+    * swap, preserving each delta's seq-range NAME — the watermark
+    * chain stays intact because those seqs WERE folded; the erased
+    * series simply no longer contributes rows. While a crashed swap
+    * leaves a delta missing, [[rollupCover]] fails loudly until the
+    * next heal puts it back.
     *
     * Returns (per-bucket (rowsBefore, rowsAfter) for rewritten
     * buckets, rollup partial rows removed). Erasure of a tag tuple
@@ -1092,8 +1044,8 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
       throw new IllegalArgumentException(
         "erase requires at least one concrete tag (full-table wipe is removeBefore's job)")
     invalidateReceiptState() // physical removal cannot ride the receipt chain
-    val fs = FileSystem.get(new java.net.URI(opts.dataDir), spark.sparkContext.hadoopConfiguration)
-    sweepStaleStaging(fs)
+    heal()
+    val fs = tableFs
     val preds = tagCols.zip(tags).collect { case (c, v) if v.nonEmpty => col(c) === v }
     // ANN-index cascade first (erasure law reaches derived data too);
     // crash direction argument as in removeBefore — under-serve an
@@ -1129,32 +1081,9 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
         if (hit.exists { case (b, n) => before(b) > n })
           publishBatch(survivors)
         assertLeaseHeld() // fence: irreversible from here (source deletes)
-        sources.foreach { p =>
-          fs.delete(p, true)
-          val parent = p.getParent
-          if (fs.exists(parent) &&
-            fs.listStatus(parent).forall(!_.getPath.getName.startsWith("bucket_ts=")))
-            fs.delete(parent, true)
-        }
+        dropBucketDirs(fs, sources)
         hit.map { case (b, nMatch) => b -> (before(b), before(b) - nMatch) }
       }
-    // recover/clean rollup-side crash leftovers BEFORE the cascade.
-    // The swap below stages the old delta as `.erase_trash_<deltaName>`
-    // — so a trash dir whose delta is MISSING marks a crash between
-    // the two renames, and recovery is one rename back; a trash or
-    // `.rstaging_` dir whose delta is healthy is stale garbage.
-    val rollupRoot = new Path(rollupPath)
-    if (fs.exists(rollupRoot)) fs.listStatus(rollupRoot).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith(".rstaging_")) fs.delete(st.getPath, true) // always garbage
-      else if (n.startsWith(".erase_trash_")) {
-        val deltaName = n.stripPrefix(".erase_trash_")
-        val target = new Path(s"$rollupPath/$deltaName")
-        if (deltaName.startsWith("delta=") && !fs.exists(target))
-          fs.rename(st.getPath, target) // crashed mid-swap: restore
-        else fs.delete(st.getPath, true) // delta healthy: trash is stale
-      }
-    }
     // cascade into every rollup delta that holds matching partials
     var rollupRemoved = 0L
     rollupDeltas(fs).foreach { case (dir, _, _) =>
@@ -1165,21 +1094,10 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
       val n = matching(delta).count()
       if (n > 0) {
         rollupRemoved += n
-        val uuid = java.util.UUID.randomUUID().toString.replace("-", "")
-        val staging = new Path(s"$rollupPath/.rstaging_$uuid")
-        surviving(delta).write.mode(SaveMode.Overwrite)
-          .partitionBy("bucket_ts").parquet(staging.toString)
-        // trash name = the delta name, so the pre-cascade sweep can
-        // restore a crashed swap with one rename
-        val trash = new Path(s"$rollupPath/.erase_trash_${dir.getName}")
-        assertLeaseHeld() // fence: swap begins
-        if (!fs.rename(dir, trash))
-          throw new IllegalStateException(s"erase: could not stage out $dir")
-        if (!fs.rename(staging, dir)) {
-          fs.rename(trash, dir) // restore; staging is invisible garbage
-          throw new IllegalStateException(s"erase: could not publish filtered $dir")
+        Publish.dir(fs, dir, replace = true, fence = fenced) { p =>
+          surviving(delta).write.mode(SaveMode.Overwrite)
+            .partitionBy("bucket_ts").parquet(p.toString)
         }
-        fs.delete(trash, true)
       }
     }
     (rewritten, rollupRemoved)
@@ -1228,8 +1146,8 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     if (asOfSeq < 0)
       throw new IllegalArgumentException("rollbackTo: asOfSeq must be >= 0")
     invalidateReceiptState() // history rewrite breaks the receipt chain
-    val fs = FileSystem.get(new java.net.URI(opts.dataDir), spark.sparkContext.hadoopConfiguration)
-    sweepStaleStaging(fs)
+    heal()
+    val fs = tableFs
     val hit = table().filter(col("seq") > asOfSeq)
       .groupBy(col("bucket_ts")).agg(count(lit(1)).as("n"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -1257,13 +1175,7 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         if (hit.exists { case (b, n) => before(b) > n })
           publishBatch(scan.filter(col("seq") <= asOfSeq))
-        sources.foreach { p =>
-          fs.delete(p, true)
-          val parent = p.getParent
-          if (fs.exists(parent) &&
-            fs.listStatus(parent).forall(!_.getPath.getName.startsWith("bucket_ts=")))
-            fs.delete(parent, true)
-        }
+        dropBucketDirs(fs, sources)
         hit.map { case (b, n) => b -> (before(b), before(b) - n) }
       }
     rewritten
@@ -1273,25 +1185,20 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     * manifest makes safe to even attempt. Re-routes every committed
     * row (LWW history intact: raw rows carry their seq, nothing is
     * resolved away) into buckets floored by `newBucketDuration`,
-    * builds the COMPLETE new table — data plus updated manifest — in
-    * a sibling staging dir invisible to readers, then swaps it in
-    * with two renames, keeping the old table as a backup until the
-    * swap completes. Use when the original bucket width stops
-    * matching the data (buckets too small → partition-dir explosion;
-    * too big → poor pruning and oversized compactions).
+    * builds the COMPLETE new table — data plus updated manifest — and
+    * swaps it in whole ([[Publish]]). Use when the original bucket
+    * width stops matching the data (buckets too small → partition-dir
+    * explosion; too big → poor pruning and oversized compactions).
     *
     * Returns the options to REOPEN with. This instance is invalid
     * afterwards by design — its opts no longer match the on-disk
     * manifest, so every subsequent call fails with
     * [[EngineErrors.OptionsMismatch]] rather than misrouting writes.
     *
-    * Crash contract: a crash before the first rename leaves the old
-    * table untouched (staging is invisible); between the renames the
-    * table path is briefly absent while both `.pre_rebucket_<id>`
-    * (complete old) and `.rebucket_<id>` (complete new) exist —
-    * restore by renaming either back. Like compaction, concurrent
-    * readers mid-swap can see FileNotFound and must re-run; there is
-    * no data-loss window. */
+    * While a crashed swap leaves the table root missing, the next
+    * heal (any destructive verb, or a put's first contact) puts the
+    * old table back. Like compaction, concurrent readers mid-swap can
+    * see FileNotFound and must re-run; there is no data-loss window. */
   def rebucket(newBucketDuration: Long): EngineOptions = mutate {
     ensureManifest(adopt = false)
     require(newBucketDuration > 0 && newBucketDuration % opts.resolution == 0,
@@ -1299,35 +1206,23 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     val newOpts = opts.copy(bucketDuration = newBucketDuration)
     if (newBucketDuration == opts.bucketDuration) return newOpts
     invalidateReceiptState() // layout rewrite: conservative chain break
-    val fs = FileSystem.get(new java.net.URI(opts.dataDir), spark.sparkContext.hadoopConfiguration)
+    val fs = tableFs
     val root = new Path(opts.tablePath)
     if (!fs.exists(root)) return newOpts // nothing to migrate
-    val uuid = java.util.UUID.randomUUID().toString.replace("-", "")
-    val stagingTable = new Path(s"${opts.tablePath}.rebucket_$uuid")
     val rows = table()
       .select(col("slot_ns") +: tagCols.map(col) :+ col("payload") :+ col("seq"): _*)
       .withColumn("bucket_ts", col("slot_ns") - col("slot_ns") % newBucketDuration)
-    rows.repartition(col("bucket_ts"))
-      .sortWithinPartitions((col("bucket_ts") +: tagCols.map(col)) :+ col("slot_ns"): _*)
-      .write.mode(SaveMode.Overwrite).partitionBy("bucket_ts")
-      .parquet(s"$stagingTable/batch=$uuid")
-    val mf = fs.create(new Path(s"$stagingTable/_graft_options"), true)
-    try mf.write((Seq(
-      "indexDepth" -> opts.indexDepth.toLong,
-      "payloadSize" -> opts.payloadSize.toLong,
-      "bucketDuration" -> newBucketDuration,
-      "resolution" -> opts.resolution)
-      .map { case (k, v) => s"$k=$v" }.mkString("", "\n", "\n")).getBytes("UTF-8"))
-    finally mf.close()
-    val backup = new Path(s"${opts.tablePath}.pre_rebucket_$uuid")
-    assertLeaseHeld() // fence: whole-table swap begins
-    if (!fs.rename(root, backup))
-      throw new IllegalStateException(s"rebucket: could not back up $root")
-    if (!fs.rename(stagingTable, root)) {
-      fs.rename(backup, root) // restore; staging left for inspection
-      throw new IllegalStateException(s"rebucket: could not swap in $stagingTable")
+    Publish.dir(fs, root, replace = true, fence = fenced) { p =>
+      writeBatch(rows.repartition(col("bucket_ts"))
+        .sortWithinPartitions((col("bucket_ts") +: tagCols.map(col)) :+ col("slot_ns"): _*),
+        new Path(p, newBatchPath().getName))
+      val mf = fs.create(new Path(p, "_graft_options"), true)
+      try mf.write(manifestBody(layoutProps.map {
+        case ("bucketDuration", _) => "bucketDuration" -> newBucketDuration
+        case kv => kv
+      }).getBytes("UTF-8"))
+      finally mf.close()
     }
-    fs.delete(backup, true)
     manifestChecked = false // this instance's opts are now stale — fail loudly from here on
     newOpts
   }
@@ -1439,22 +1334,12 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
       case _ => lwwChecksum(toSeqInclusive)
     }
     writeReceiptState(toSeqInclusive, rcRows, rcHash)
-    // temp + rename (the manifest discipline): a replica listing the
-    // delta dir mid-create must see either no receipt (argument
-    // error) or a complete one — never a truncated parse
-    val fs = new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val rtmp = new Path(
-      s"$outDir/._graft_receipt_${java.util.UUID.randomUUID().toString.replace("-", "")}")
-    val rf = fs.create(rtmp, true)
-    try rf.write(
-      s"watermark=$toSeqInclusive\nrows=$rcRows\nhash=$rcHash\n".getBytes("UTF-8"))
-    finally rf.close()
+    // a replica listing the delta dir mid-create must see either no
+    // receipt (argument error) or a complete one
     val rdst = new Path(s"$outDir/_graft_receipt")
-    if (!fs.rename(rtmp, rdst)) {
-      fs.delete(rdst, false)
-      if (!fs.rename(rtmp, rdst))
-        throw new IllegalStateException(s"exportDelta: could not publish receipt $rdst")
-    }
+    if (!Publish.file(rdst.getFileSystem(spark.sparkContext.hadoopConfiguration), rdst,
+        s"watermark=$toSeqInclusive\nrows=$rcRows\nhash=$rcHash\n", replace = true))
+      throw new IllegalStateException(s"exportDelta: could not publish receipt $rdst")
     nDelta
   }
 
@@ -1489,18 +1374,9 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     }.toOption
   }
 
-  private def writeReceiptState(w: Long, rows: Long, hash: Long): Unit = {
-    val fs = tableFs
-    val tmp = new Path(
-      s"${opts.tablePath}/._graft_receipt_state_${java.util.UUID.randomUUID().toString.replace("-", "")}")
-    val out = fs.create(tmp, true)
-    try out.write(s"watermark=$w\nrows=$rows\nhash=$hash\n".getBytes("UTF-8"))
-    finally out.close()
-    if (!fs.rename(tmp, receiptStatePath)) {
-      fs.delete(receiptStatePath, false)
-      if (!fs.rename(tmp, receiptStatePath)) fs.delete(tmp, false)
-    }
-  }
+  private def writeReceiptState(w: Long, rows: Long, hash: Long): Unit =
+    Publish.file(tableFs, receiptStatePath, s"watermark=$w\nrows=$rows\nhash=$hash\n",
+      replace = true)
 
   /** Break the receipt chain: the next exportDelta recomputes the
     * checksum in full. Called by every verb that changes what a PAST
@@ -1616,17 +1492,14 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     * [[getAsOf]] MVCC watermark continue from the snapshot's cut,
     * and importing into a non-empty table behaves exactly like any
     * other historical batch (LWW resolves overlaps by seq). One
-    * validation scan + one bucket-partitioned publish; crash before
-    * the rename leaves only an invisible staging dir. Returns the
-    * imported row count. */
+    * bucket-partitioned publish whose write job carries the
+    * validation counts. Returns the imported row count. */
   def importSnapshot(srcDir: String): Long = mutate {
     ensureManifest(adopt = false)
     val snap = spark.read.schema(tableSchema).parquet(srcDir)
-    // r15 single-pass: the layout-validation counts ride the STAGING
-    // write as observed metrics instead of a separate full scan. The
-    // all-or-nothing contract is intact — the staged dir is invisible
-    // to readers, and on any violation (or an empty snapshot) it is
-    // deleted, never renamed into the table.
+    // r15 single-pass: the layout-validation counts ride the staged
+    // write as observed metrics instead of a separate full scan; any
+    // violation (or an empty snapshot) discards the staged batch.
     val obs = new org.apache.spark.sql.Observation()
     val checked = snap.observe(obs,
       count(lit(1)).as("n"),
@@ -1637,27 +1510,22 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
       count(when(tagCols.map(c => col(c).isNull || col(c) === "").reduce(_ || _), 1))
         .as("invalid_tags"),
       count(when(col("seq").isNull || col("seq") < 0, 1)).as("invalid_seq"))
-    val staging = stageBatch(checked.select(tableSchema.fieldNames.map(col): _*))
-    // an empty snapshot can lose its metrics to AQE empty-relation
-    // propagation — which itself proves n = 0 (and zero violations)
-    val m = obs.get
-    val n = m.get("n").map(_.asInstanceOf[Long]).getOrElse(0L)
-    val bad = Seq("misaligned", "misplaced", "invalid_payload",
-      "invalid_tags", "invalid_seq")
-      .collect { case name if m.get(name).exists(_.asInstanceOf[Long] > 0) =>
-        s"$name=${m(name)}" }
-    if (bad.nonEmpty) {
-      tableFs.delete(staging, true)
-      throw new IllegalArgumentException(
-        s"importSnapshot: snapshot violates this engine's layout (${bad.mkString(", ")})")
-    }
-    if (n > 0) {
+    // absent metrics (an empty snapshot) prove n = 0 and no violations
+    Publish.observed(tableFs, newBatchPath()) { p =>
+      writeBatch(checked.select(tableSchema.fieldNames.map(col): _*), p); obs.get
+    } { m =>
+      val bad = Seq("misaligned", "misplaced", "invalid_payload",
+        "invalid_tags", "invalid_seq")
+        .collect { case name if m(name).asInstanceOf[Long] > 0 => s"$name=${m(name)}" }
+      if (bad.nonEmpty)
+        throw new IllegalArgumentException(
+          s"importSnapshot: snapshot violates this engine's layout (${bad.mkString(", ")})")
+      val publish = m("n").asInstanceOf[Long] > 0
       // imported rows keep their original (possibly past-watermark)
       // seqs: they can change what a chained watermark resolves to
-      invalidateReceiptState()
-      publishStaged(staging)
-    } else tableFs.delete(staging, true)
-    n
+      if (publish) invalidateReceiptState()
+      publish
+    }.getOrElse("n", 0L).asInstanceOf[Long]
   }
 
   /** Replica-side APPLY: [[importSnapshot]] + [[verifyReceipt]] as one
@@ -1735,20 +1603,21 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
       .filter(fs.exists)
   }
 
-  /** Remove crash-era staging dirs (invisible to readers; swept for
-    * hygiene). Only dirs older than an hour are touched so an
-    * in-flight publish from a concurrent writer is never deleted. */
-  private def sweepStaleStaging(fs: FileSystem): Unit = {
+  /** [[Publish.heal]] every dir this database publishes into: the
+    * data dir (only for this database's table and index roots, which
+    * rebucket and buildVectorIndex swap), then the table, rollup and
+    * index roots. Runs at the start of the destructive verbs and on a
+    * put's first contact. */
+  private[graft] def heal(): Unit = {
     assertLeaseHeld()
-    val root = new Path(opts.tablePath)
-    if (!fs.exists(root)) return
-    val cutoff = System.currentTimeMillis() - 3600L * 1000
-    fs.listStatus(root).foreach { st =>
-      if (st.getPath.getName.startsWith(".staging_") &&
-        st.getModificationTime < cutoff)
-        fs.delete(st.getPath, true)
-    }
+    val fs = tableFs
+    val table = new Path(opts.tablePath)
+    val index = new Path(vindexPath)
+    Publish.heal(fs, table.getParent, Set(table.getName, index.getName))
+    Seq(table, new Path(rollupPath), index).foreach(Publish.heal(fs, _))
   }
+
+  private val fenced: () => Unit = () => assertLeaseHeld()
 
   // ------------------------------------------------------------------
   // Continuous aggregate (rollup) — incrementally maintained partial
@@ -1762,12 +1631,11 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
   // (series, rollup-slot). Each refresh folds exactly the engine rows
   // with ingest seq in (lo, hi] — the monotone seq column IS the
   // exactly-once watermark, carried in the delta dir NAME, so there is
-  // no separate state file to corrupt and the atomic dir rename makes
-  // a refresh all-or-nothing. Reads merge partials on the fly
+  // no separate state file to corrupt and publishing the delta
+  // publishes its range. Reads merge partials on the fly
   // (merge-on-read): counts/sums add, min/max fold, last resolves by
   // max seq — all partial-agg-friendly, so the merge combines
-  // map-side. Crash anywhere = either the delta exists (named with
-  // its range) or it does not; overlapping ranges left by a crashed
+  // map-side. Overlapping ranges left by a crashed
   // compaction are resolved by the greedy interval cover below, which
   // always prefers the widest delta starting at the watermark chain's
   // next link — additive counters are never double-counted.
@@ -1791,7 +1659,7 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     * layout property of the rollup table, same fail-closed contract
     * as the engine's own options manifest. */
   private def ensureRollupOptions(res: Long, adopt: Boolean): Unit = {
-    val fs = FileSystem.get(new java.net.URI(opts.dataDir), spark.sparkContext.hadoopConfiguration)
+    val fs = tableFs
     if (fs.exists(rollupOptionsPath)) {
       val in = fs.open(rollupOptionsPath)
       val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
@@ -1807,10 +1675,7 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     if (!adopt)
       throw new IllegalStateException(s"no rollup exists at $rollupPath — refresh first")
     fs.mkdirs(new Path(rollupPath))
-    val tmp = new Path(s"$rollupPath/._rollup_options_${java.util.UUID.randomUUID().toString.replace("-", "")}")
-    val out = fs.create(tmp, true)
-    try out.write(s"rollupResolution=$res\n".getBytes("UTF-8")) finally out.close()
-    if (!fs.rename(tmp, rollupOptionsPath)) fs.delete(tmp, false)
+    Publish.file(fs, rollupOptionsPath, s"rollupResolution=$res\n", replace = false)
     // revalidate what's on disk (two racing first refreshes: one wins)
     ensureRollupOptions(res, adopt = false)
   }
@@ -1819,8 +1684,8 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     * (path, loSeqExclusive, hiSeqInclusive) — the naming discipline
     * shared by the rollup deltas and the vector-index deltas /
     * tombstones: the folded range IS the directory name, so there is
-    * no separate watermark file to corrupt and an atomic dir rename
-    * publishes range + data together. */
+    * no separate watermark file to corrupt and one publish carries
+    * range + data together. */
   private def seqRangeDirs(fs: FileSystem, root: Path,
       prefix: String): Seq[(Path, Long, Long)] = {
     if (!fs.exists(root)) return Seq.empty
@@ -1863,9 +1728,9 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
 
   /** Incremental refresh: fold engine rows with seq > watermark into
     * a new delta of partial aggregates at `rollupResolution`. Exactly
-    * once by construction — the folded range is the delta's name, the
-    * publish is one atomic rename, and a re-run after any crash sees
-    * the same watermark the survivors define. Returns the number of
+    * once by construction — the folded range is the delta's name, so
+    * a re-run after any crash sees the same watermark the survivors
+    * define. Returns the number of
     * partial rows published (0 when already up to date). The new-row
     * scan carries a `seq > wm` predicate: not a partition prune, but
     * batch files are immutable with tight seq ranges, so parquet
@@ -1886,7 +1751,7 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     require(rollupResolution > 0 && rollupResolution % opts.resolution == 0,
       "rollupResolution must be a positive multiple of resolution")
     ensureRollupOptions(rollupResolution, adopt = true)
-    val fs = FileSystem.get(new java.net.URI(opts.dataDir), spark.sparkContext.hadoopConfiguration)
+    val fs = tableFs
     val wm = rollupCover(rollupDeltas(fs)).lastOption.map(_._3).getOrElse(-1L)
     val cur = currentSeq()
     if (cur <= wm) return 0L
@@ -1907,19 +1772,14 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
         col("vmin") :+ col("vmax") :+ col("__lw.seq").as("last_seq") :+
         col("__lw.value").as("last_val") :+
         col("bucket_ts"): _*)
-    val uuid = java.util.UUID.randomUUID().toString.replace("-", "")
-    val staging = new Path(s"$rollupPath/.rstaging_$uuid")
     // r15: the published-row count (the return value) rides the write
     // job as an observed metric — no footer-count job per refresh
     val obs = new org.apache.spark.sql.Observation()
-    partials.observe(obs, count(lit(1)).as("n"))
-      .write.mode(SaveMode.Overwrite).partitionBy("bucket_ts").parquet(staging.toString)
-    val target = new Path(s"$rollupPath/delta=${wm}_$cur")
-    if (!fs.rename(staging, target)) {
-      fs.delete(staging, true)
-      throw new IllegalStateException(s"rollup delta publish failed: $staging")
-    }
-    obs.get.get("n").map(_.asInstanceOf[Long]).getOrElse(0L)
+    Publish.observed(fs, new Path(s"$rollupPath/delta=${wm}_$cur")) { p =>
+      partials.observe(obs, count(lit(1)).as("n"))
+        .write.mode(SaveMode.Overwrite).partitionBy("bucket_ts").parquet(p.toString)
+      obs.get
+    }(_ => true).getOrElse("n", 0L).asInstanceOf[Long]
   }
 
   /** Merge-on-read rollup query: final (series, rollup-slot) rows over
@@ -2000,7 +1860,7 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     * deletes. Returns the number of deltas folded (0 = nothing to do). */
   def compactRollup(): Int = mutate {
     ensureManifest(adopt = false)
-    val fs = FileSystem.get(new java.net.URI(opts.dataDir), spark.sparkContext.hadoopConfiguration)
+    val fs = tableFs
     val all = rollupDeltas(fs)
     val cover = rollupCover(all)
     // sweep crashed-compaction leftovers even when the chain is short
@@ -2022,15 +1882,11 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
         .select(col("rslot_ns") +: tagCols.map(col) :+ col("cnt") :+ col("vsum") :+
           col("vmin") :+ col("vmax") :+ col("last_seq") :+ col("last_val") :+
           col("bucket_ts"): _*)
-      val uuid = java.util.UUID.randomUUID().toString.replace("-", "")
-      val staging = new Path(s"$rollupPath/.rstaging_$uuid")
-      merged.write.mode(SaveMode.Overwrite).partitionBy("bucket_ts").parquet(staging.toString)
       // the target name is fresh (cover.size > 1 means no single delta
       // already spans the whole chain); publish first, then delete
       val target = new Path(s"$rollupPath/delta=${cover.head._2}_${cover.last._3}")
-      if (!fs.rename(staging, target)) {
-        fs.delete(staging, true)
-        throw new IllegalStateException(s"rollup compaction publish failed: $staging")
+      Publish.dir(fs, target) { p =>
+        merged.write.mode(SaveMode.Overwrite).partitionBy("bucket_ts").parquet(p.toString)
       }
       cover.foreach { case (p, _, _) => if (p != target) fs.delete(p, true) }
     }
@@ -2079,8 +1935,8 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
   //
   // Destructive verbs cascade (derived data must never serve rows the
   // table no longer has): erase/removeBefore FILTER deltas+tombstones
-  // in place (two-rename swap, self-healing — the erase rollup
-  // discipline); rollbackTo drops the suffix of the chain (by
+  // in place (a Publish swap, as erase does for rollup deltas);
+  // rollbackTo drops the suffix of the chain (by
   // construction the affected deltas are a suffix, exactly the rollup
   // cascade). The index is derived and rebuildable, so every heal
   // path may fall back to fail-closed absence, never to stale serves.
@@ -2122,39 +1978,6 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
 
   private def vindexTombs(fs: FileSystem): Seq[(Path, Long, Long)] =
     seqRangeDirs(fs, new Path(vindexPath), "tomb=")
-
-  /** Crash-heal + hygiene: restore a `.vtrash_<dirName>` whose target
-    * is missing (crashed mid-swap — one rename back), delete trash
-    * whose target is healthy, and sweep stale `.vstaging_` dirs. Same
-    * self-heal contract as the erase path's rollup trash handling.
-    *
-    * MUTATES index state, so it runs ONLY from mutate()-gated verbs
-    * (refresh / compact / filter cascades) — a lock-free read
-    * calling this would race a concurrent mutator's own staging/trash
-    * dirs (delete its in-flight staging between write and rename;
-    * restore a trash dir mid-swap). Cross-JVM the same race is closed
-    * by the writer lease those verbs hold: no second JVM's
-    * maintenance verb runs concurrently, so the unconditional
-    * .vstaging_/.vtrash_ sweep here never touches live in-flight
-    * dirs. Pure reads (annSearch,
-    * vectorIndexInverted) never heal: a crashed swap makes them fail
-    * loudly on the broken chain until the next maintenance verb runs
-    * — the same reader posture as compactBucket's documented
-    * concurrent-reader race. */
-  private def healVindex(fs: FileSystem): Unit = {
-    val root = new Path(vindexPath)
-    if (!fs.exists(root)) return
-    fs.listStatus(root).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith(".vstaging_")) fs.delete(st.getPath, true)
-      else if (n.startsWith(".vtrash_")) {
-        val target = new Path(s"$vindexPath/${n.stripPrefix(".vtrash_")}")
-        if ((n.contains("delta=") || n.contains("tomb=")) && !fs.exists(target))
-          fs.rename(st.getPath, target)
-        else fs.delete(st.getPath, true)
-      }
-    }
-  }
 
   /** Stored-index manifest: coarse k plus the optional PQ tier. */
   private final case class VindexMeta(k: Int, pq: Option[PqParams])
@@ -2246,9 +2069,8 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     * payload: deterministic k-means training (operators/Ivf), one
     * broadcast assignment pass, one cell-partitioned write. The whole
     * tree — centroids, inverted file, optional PQ codebooks, manifest
-    * — is assembled in an invisible staging root and published with
-    * ONE rename, so readers see the old index, no index, or the
-    * complete new index, never a half-built one.
+    * — is published at once ([[Publish]]), so readers see the old
+    * index or the complete new index, never a half-built one.
     *
     * `pq = Some(PqParams(m, k, iters))` adds the ADC tier: per-
     * subspace codebooks (operators/Pq training discipline) plus an
@@ -2266,18 +2088,7 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     pq.foreach(p => require((opts.payloadSize / 4) % p.m == 0,
       s"pq m=${p.m} must divide dim=${opts.payloadSize / 4}"))
     val fs = tableFs
-    // sweep crash-era build staging: a died build leaves a full
-    // index-sized `.vbuild_<uuid>` sibling tree that no other heal
-    // path covers; age-gated like sweepStaleStaging so a concurrent
-    // cross-JVM builder's in-flight staging is never deleted
-    val vbuildParent = new Path(opts.tablePath).getParent
-    val vbuildCutoff = System.currentTimeMillis() - 3600L * 1000
-    if (vbuildParent != null && fs.exists(vbuildParent))
-      fs.listStatus(vbuildParent).foreach { st =>
-        if (st.getPath.getName.startsWith(s"${opts.databaseName}.vbuild_") &&
-          st.getModificationTime < vbuildCutoff)
-          fs.delete(st.getPath, true)
-      }
+    heal()
     val cur = currentSeq()
     require(cur >= 0, "buildVectorIndex: table is empty — nothing to index")
     // persist: k-means training re-scans the vector view per Lloyd
@@ -2307,28 +2118,21 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
           .select((col("slot_ns") +: tagCols.map(col)) :+ col("vec") :+
             col("codes") :+ col("seq") :+ col("cid"): _*)
     }
-    val uuid = java.util.UUID.randomUUID().toString.replace("-", "")
-    val staging = new Path(s"${opts.tablePath}.vbuild_$uuid")
-    cent.coalesce(1).write.parquet(s"$staging/centroids")
-    books.foreach(_.coalesce(1).write.parquet(s"$staging/pq_books"))
     // r15: the indexed-vector count (the return value) rides the
     // inverted-file write as an observed metric — no footer-count job
     val obs = new org.apache.spark.sql.Observation()
-    assigned.observe(obs, count(lit(1)).as("n"))
-      .write.partitionBy("cid").parquet(s"$staging/delta=-1_$cur")
-    val pqLines = pq.map(p => s"pq_m=${p.m}\npq_k=${p.k}\npq_iters=${p.iters}\n").getOrElse("")
-    val mf = fs.create(new Path(s"$staging/_vindex_options"), true)
-    try mf.write(
-      (s"k=$k\ndim=${opts.payloadSize / 4}\niters=$iters\n" + pqLines).getBytes("UTF-8"))
-    finally mf.close()
-    val root = new Path(vindexPath)
-    assertLeaseHeld() // fence: rebuild drop begins
-    if (fs.exists(root)) fs.delete(root, true) // rebuild: fail-closed window, never stale
-    if (!fs.rename(staging, root)) {
-      fs.delete(staging, true)
-      throw new IllegalStateException(s"buildVectorIndex: could not publish $root")
-    }
-    obs.get.get("n").map(_.asInstanceOf[Long]).getOrElse(0L)
+    Publish.observed(fs, new Path(vindexPath), replace = true, fence = fenced) { staging =>
+      cent.coalesce(1).write.parquet(s"$staging/centroids")
+      books.foreach(_.coalesce(1).write.parquet(s"$staging/pq_books"))
+      assigned.observe(obs, count(lit(1)).as("n"))
+        .write.partitionBy("cid").parquet(s"$staging/delta=-1_$cur")
+      val pqLines = pq.map(p => s"pq_m=${p.m}\npq_k=${p.k}\npq_iters=${p.iters}\n").getOrElse("")
+      val mf = fs.create(new Path(s"$staging/_vindex_options"), true)
+      try mf.write(
+        (s"k=$k\ndim=${opts.payloadSize / 4}\niters=$iters\n" + pqLines).getBytes("UTF-8"))
+      finally mf.close()
+      obs.get
+    }(_ => true).getOrElse("n", 0L).asInstanceOf[Long]
     } finally rows.unpersist()
   }
 
@@ -2367,7 +2171,7 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
   def refreshVectorIndex(): Long = mutate {
     ensureManifest(adopt = false)
     val fs = tableFs
-    healVindex(fs)
+    heal()
     val meta = readVindexOptions(fs)
     val cover = rollupCover(vindexDeltas(fs))
     val wm = cover.lastOption.map(_._3).getOrElse(
@@ -2388,83 +2192,68 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
             col("codes") :+ col("seq") :+ col("cid"): _*)
     }
     // r15 job-count reduction (guide §1.2 step 1): the epoch's delta
-    // is STAGED first — one write job whose observed metrics carry the
-    // row count (the return value) and slot min/max (the tombstone
-    // lookup's prune range); the old shape paid a persist-
-    // materializing range agg, a delta write, and a footer-count job.
-    // The tombstone pipeline then reads the STAGED files' key columns
-    // (no caching of the epoch's vectors at all). Publish order keeps
-    // the crash contract: tomb dir first, then the delta rename —
-    // identical windows to the old publish()-helper sequence, with the
-    // staged write itself invisible until the final rename.
+    // stages in ONE write job whose observed metrics carry the row
+    // count (the return value) and slot min/max (the tombstone
+    // lookup's prune range); the tombstone pipeline then reads the
+    // STAGED files' key columns (no caching of the epoch's vectors at
+    // all). Tombs publish BEFORE the delta: a tomb applies only once
+    // the cover reaches its hi, so every crash window serves a
+    // consistent older watermark. Either target may already exist
+    // from a crashed replay of the same range, hence `replace`.
     val keyNames = tagCols :+ "slot_ns"
-    def vstaging() =
-      new Path(s"$vindexPath/.vstaging_${java.util.UUID.randomUUID().toString.replace("-", "")}")
-    def swapIn(staging: Path, name: String): Unit = {
-      val target = new Path(s"$vindexPath/$name")
-      assertLeaseHeld() // fence: publish swap begins
-      if (fs.exists(target)) fs.delete(target, true) // crash replay of same range
-      if (!fs.rename(staging, target)) {
-        fs.delete(staging, true)
-        throw new IllegalStateException(s"refreshVectorIndex: could not publish $target")
-      }
-    }
     val obs = new org.apache.spark.sql.Observation()
-    val deltaStaging = vstaging()
-    assigned.observe(obs, count(lit(1)).as("n"),
-        min(col("slot_ns")).as("lo"), max(col("slot_ns")).as("hi"))
-      .write.mode(SaveMode.Overwrite).partitionBy("cid").parquet(deltaStaging.toString)
-    // an empty epoch delta can lose its metrics to AQE empty-relation
-    // propagation — which itself proves n = 0 (no tombs either way)
-    val m = obs.get
-    val nFolded = m.get("n").map(_.asInstanceOf[Long]).getOrElse(0L)
-    // tombstones: incoming keys already indexed at-or-below wm. The
-    // prior-existence set comes from the STORED INDEX COVER, never
-    // the raw table — compactBucket LWW-drops superseded table rows,
-    // so a table-side lookup (seq <= wm) goes blind after put(v1) →
-    // build → put(v2) → compactBucket → refresh and the stale v1
-    // would serve from its old cell forever. The cover IS the
-    // indexed content ≤ wm by construction (every delta's rows have
-    // seq ≤ its dir hi ≤ wm), it prunes to the epoch's slot range by
-    // parquet stats, and only the key columns are read (vec/codes
-    // column-pruned) — O(index keys in slot range), never a vector
-    // scan. The epoch's own keys come from the staged files, key
-    // columns only.
-    if (nFolded > 0) {
-      val (lo, hi) = (m("lo").asInstanceOf[Long], m("hi").asInstanceOf[Long])
-      val stagedKeySchema = StructType(
-        StructField("slot_ns", LongType) +:
-          tagCols.map(StructField(_, StringType)) :+
-          StructField("seq", LongType) :+
-          StructField("cid", LongType))
-      val stagedKeys = spark.read.schema(stagedKeySchema)
-        .option("basePath", deltaStaging.toString)
-        .parquet(deltaStaging.toString).drop("cid")
-      val tomb = spark.read.schema(vindexSchema).option("basePath", vindexPath)
-        .parquet(cover.map(_._1.toString): _*)
-        .filter(col("slot_ns") >= lo && col("slot_ns") <= hi)
-        .select(keyNames.map(col): _*)
-        .join(stagedKeys.select(keyNames.map(col): _*), keyNames, "left_semi")
-        .distinct()
-        .join(stagedKeys.select((keyNames.map(col) :+ col("seq").as("win_seq")): _*),
-          keyNames)
-        .select((tagCols.map(col) :+ col("slot_ns") :+ col("win_seq")): _*)
-      // an epoch with no overwritten keys (the overwhelmingly common
-      // case) publishes NO tomb dir: under high-frequency streaming a
-      // dir per epoch would pile up listings every probe pays for,
-      // and an absent tomb applies nothing by definition. One job:
-      // the tomb stages with an observed count and is renamed in (or
-      // discarded) by what the count says.
-      val tobs = new org.apache.spark.sql.Observation()
-      val tombStaging = vstaging()
-      tomb.observe(tobs, count(lit(1)).as("n"))
-        .write.mode(SaveMode.Overwrite).parquet(tombStaging.toString)
-      if (tobs.get.get("n").exists(_.asInstanceOf[Long] > 0))
-        swapIn(tombStaging, s"tomb=${wm}_$cur")
-      else fs.delete(tombStaging, true)
-    }
-    swapIn(deltaStaging, s"delta=${wm}_$cur")
-    nFolded
+    Publish.observed(fs, new Path(s"$vindexPath/delta=${wm}_$cur"),
+        replace = true, fence = fenced) { deltaStaging =>
+      assigned.observe(obs, count(lit(1)).as("n"),
+          min(col("slot_ns")).as("lo"), max(col("slot_ns")).as("hi"))
+        .write.mode(SaveMode.Overwrite).partitionBy("cid").parquet(deltaStaging.toString)
+      val m = obs.get
+      // tombstones: incoming keys already indexed at-or-below wm. The
+      // prior-existence set comes from the STORED INDEX COVER, never
+      // the raw table — compactBucket LWW-drops superseded table rows,
+      // so a table-side lookup (seq <= wm) goes blind after put(v1) →
+      // build → put(v2) → compactBucket → refresh and the stale v1
+      // would serve from its old cell forever. The cover IS the
+      // indexed content ≤ wm by construction (every delta's rows have
+      // seq ≤ its dir hi ≤ wm), it prunes to the epoch's slot range by
+      // parquet stats, and only the key columns are read (vec/codes
+      // column-pruned) — O(index keys in slot range), never a vector
+      // scan. The epoch's own keys come from the staged files, key
+      // columns only.
+      if (m.get("n").exists(_.asInstanceOf[Long] > 0)) {
+        val (lo, hi) = (m("lo").asInstanceOf[Long], m("hi").asInstanceOf[Long])
+        val stagedKeySchema = StructType(
+          StructField("slot_ns", LongType) +:
+            tagCols.map(StructField(_, StringType)) :+
+            StructField("seq", LongType) :+
+            StructField("cid", LongType))
+        val stagedKeys = spark.read.schema(stagedKeySchema)
+          .option("basePath", deltaStaging.toString)
+          .parquet(deltaStaging.toString).drop("cid")
+        val tomb = spark.read.schema(vindexSchema).option("basePath", vindexPath)
+          .parquet(cover.map(_._1.toString): _*)
+          .filter(col("slot_ns") >= lo && col("slot_ns") <= hi)
+          .select(keyNames.map(col): _*)
+          .join(stagedKeys.select(keyNames.map(col): _*), keyNames, "left_semi")
+          .distinct()
+          .join(stagedKeys.select((keyNames.map(col) :+ col("seq").as("win_seq")): _*),
+            keyNames)
+          .select((tagCols.map(col) :+ col("slot_ns") :+ col("win_seq")): _*)
+        // an epoch with no overwritten keys (the overwhelmingly common
+        // case) publishes NO tomb dir: under high-frequency streaming a
+        // dir per epoch would pile up listings every probe pays for,
+        // and an absent tomb applies nothing by definition. One job:
+        // the tomb's observed count decides its publish.
+        val tobs = new org.apache.spark.sql.Observation()
+        Publish.observed(fs, new Path(s"$vindexPath/tomb=${wm}_$cur"),
+            replace = true, fence = fenced) { p =>
+          tomb.observe(tobs, count(lit(1)).as("n"))
+            .write.mode(SaveMode.Overwrite).parquet(p.toString)
+          tobs.get
+        }(_("n").asInstanceOf[Long] > 0)
+      }
+      m
+    }(_ => true).getOrElse("n", 0L).asInstanceOf[Long]
   }
 
   /** Fold the vector-index delta chain into ONE delta and materialize
@@ -2483,7 +2272,7 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
   def compactVectorIndex(): Int = mutate {
     ensureManifest(adopt = false)
     val fs = tableFs
-    healVindex(fs)
+    heal()
     readVindexOptions(fs)
     val all = vindexDeltas(fs)
     val cover = rollupCover(all)
@@ -2513,29 +2302,14 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
       .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
       .select((col("slot_ns") +: tagCols.map(col)) :+ col("vec") :+
         col("codes") :+ col("seq") :+ col("cid"): _*)
-    val uuid = java.util.UUID.randomUUID().toString.replace("-", "")
-    val staging = new Path(s"$vindexPath/.vstaging_$uuid")
-    merged.write.mode(SaveMode.Overwrite).partitionBy("cid").parquet(staging.toString)
+    // with a single delta only tombstones are folded, and the merge
+    // replaces that delta (the target exists); otherwise the target is
+    // fresh and the merged cover's old deltas are deleted after it
     val target = new Path(s"$vindexPath/delta=${lo}_$hi")
-    assertLeaseHeld() // fence: compaction swap begins
-    if (fs.exists(target) && cover.size == 1) {
-      // only tombstones to fold into the single existing delta: the
-      // freshly-written merge REPLACES it via trash swap (heal-safe)
-      val trash = new Path(s"$vindexPath/.vtrash_${target.getName}")
-      if (!fs.rename(target, trash))
-        throw new IllegalStateException(s"compactVectorIndex: could not stage out $target")
-      if (!fs.rename(staging, target)) {
-        fs.rename(trash, target)
-        throw new IllegalStateException(s"compactVectorIndex: could not publish $target")
-      }
-      fs.delete(trash, true)
-    } else {
-      if (!fs.rename(staging, target)) {
-        fs.delete(staging, true)
-        throw new IllegalStateException(s"compactVectorIndex: could not publish $target")
-      }
-      cover.foreach { case (p, _, _) => if (p != target) fs.delete(p, true) }
+    Publish.dir(fs, target, replace = true, fence = fenced) { p =>
+      merged.write.mode(SaveMode.Overwrite).partitionBy("cid").parquet(p.toString)
     }
+    cover.foreach { case (p, _, _) => if (p != target) fs.delete(p, true) }
     tombs.foreach { case (p, _, thi) => if (thi <= hi) fs.delete(p, true) }
     cover.size
   }
@@ -3000,8 +2774,8 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
 
   /** Drop the index (and its tombstones) entirely — the explicit
     * invalidation verb; annSearch fails loudly afterwards.
-    * writeLock'd like every other index mutator (the healVindex
-    * mutation discipline): an unlocked drop racing an in-flight
+    * writeLock'd like every other index mutator: an unlocked drop
+    * racing an in-flight
     * refresh/compact could delete the root between their staging
     * write and rename, surfacing as a confusing partial-publish
     * failure instead of a clean drop-then-fail-loudly. */
@@ -3013,15 +2787,13 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
   }
 
   /** Cascade for erase/removeBefore: rewrite every index delta and
-    * tombstone dir dropping rows where `doomed` holds — two-rename
-    * swap per dir, healVindex self-heals a crash between the renames.
-    * Seq-range NAMES are preserved: the folded ranges stay true (the
-    * erased rows simply no longer contribute), so the cover chain
-    * never breaks. No-op when no index exists. */
+    * tombstone dir dropping rows where `doomed` holds, each by a
+    * [[Publish]] swap. Seq-range NAMES are preserved: the folded
+    * ranges stay true (the erased rows simply no longer contribute),
+    * so the cover chain never breaks. No-op when no index exists. */
   private def filterVectorIndex(doomed: DataFrame => Column): Unit = {
     val fs = tableFs
     if (!fs.exists(new Path(vindexPath))) return
-    healVindex(fs)
     def rewrite(dir: Path, schema: StructType, partitioned: Boolean): Unit = {
       val read =
         if (partitioned)
@@ -3029,20 +2801,10 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
             .parquet(dir.toString)
         else spark.read.schema(schema).parquet(dir.toString)
       if (read.filter(doomed(read)).isEmpty) return // untouched dirs cost one scan, no rewrite
-      val survivors = read.filter(!doomed(read))
-      val uuid = java.util.UUID.randomUUID().toString.replace("-", "")
-      val staging = new Path(s"$vindexPath/.vstaging_$uuid")
-      val w = survivors.write.mode(SaveMode.Overwrite)
-      (if (partitioned) w.partitionBy("cid") else w).parquet(staging.toString)
-      val trash = new Path(s"$vindexPath/.vtrash_${dir.getName}")
-      assertLeaseHeld() // fence: cascade swap begins
-      if (!fs.rename(dir, trash))
-        throw new IllegalStateException(s"vector index cascade: could not stage out $dir")
-      if (!fs.rename(staging, dir)) {
-        fs.rename(trash, dir) // restore; staging is invisible garbage
-        throw new IllegalStateException(s"vector index cascade: could not publish $dir")
+      Publish.dir(fs, dir, replace = true, fence = fenced) { p =>
+        val w = read.filter(!doomed(read)).write.mode(SaveMode.Overwrite)
+        (if (partitioned) w.partitionBy("cid") else w).parquet(p.toString)
       }
-      fs.delete(trash, true)
     }
     vindexDeltas(fs).foreach { case (dir, _, _) =>
       rewrite(dir, vindexSchema, partitioned = true)

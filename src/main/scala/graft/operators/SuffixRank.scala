@@ -24,6 +24,12 @@ object SuffixRank {
   /** tok = (doc_id, p, tok) with 1-based positions → (doc_id, p, r).
     * `L` must be a power of two.
     *
+    * Precondition: positions are contiguous 1..len per doc — no gaps,
+    * no duplicates. "The rank at p + k" is read as lead(r, k), so a
+    * gapped input (e.g. positions left after a stopword filter) would
+    * silently rank the wrong suffixes; the first doubling round
+    * asserts it and fails the job instead.
+    *
     * r14 (guide §2.4): every ranking step now attaches its dense rank
     * IN PLACE via [[DistributedRank.withGlobalDenseRank]] (one range
     * exchange; equal keys share a partition, per-partition dense_rank
@@ -58,8 +64,16 @@ object SuffixRank {
       // operator in the pipeline, never a global funnel.
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("doc_id")).orderBy(col("p"))
-      val paired = suf.select(col("doc_id"), col("p"), col("r"),
-        coalesce(lead(col("r"), k).over(w), lit(0L)).as("rn"))
+      val next = coalesce(lead(col("r"), k).over(w), lit(0L))
+      // the contiguity check rides the first round's window and lives
+      // inside `rn`, a rank key, so column pruning cannot drop it
+      val rn =
+        if (k > 1) next
+        else when(row_number().over(w) =!= col("p"), raise_error(concat(
+          lit("prefixDoublingRanks: positions must be contiguous 1..len per doc; doc "),
+          col("doc_id").cast("string"), lit(" has p="), col("p").cast("string"))))
+          .otherwise(next)
+      val paired = suf.select(col("doc_id"), col("p"), col("r"), rn.as("rn"))
       suf = DistributedRank.withGlobalDenseRank(paired, "r2",
           Seq(col("r"), col("rn")))
         .select(col("doc_id"), col("p"), col("r2").as("r"))

@@ -791,6 +791,23 @@ class EngineSpec extends SparkTestBase {
     assert(ex.getMessage.contains(EngineErrors.OptionsMismatch))
   }
 
+  test("a nondeterministic source the write job rejects entirely: ledger ok equals rows stored") {
+    // The write job sees every row rejected, so AQE drops its metrics
+    // node; a second evaluation of the source would accept them all.
+    val (e, _) = mkEngine()
+    FlakyTags.seen.clear()
+    val t = tag4
+    val flaky = org.apache.spark.sql.functions.udf((id: Long) =>
+      if (FlakyTags.seen.add(id)) Seq.empty[String] else t).asNondeterministic()
+    import org.apache.spark.sql.functions.{col, lit}
+    val points = spark.range(5).select(
+      (lit(11000L) + col("id") * 10).as("ts"), flaky(col("id")).as("tags"),
+      lit(pld(7)).as("payload"), col("id").as("seq"))
+    val ledger = e.put(points)
+    val stored = payloads(e.get(11000L, 11050L, tag4)).count(_ == pld(7).toSeq)
+    assert(ledger.getOrElse(EngineErrors.Ok, 0L) === stored.toLong, s"ledger $ledger")
+  }
+
   test("a corrupt or truncated manifest fails closed, never validates by omission") {
     val dir = Files.createTempDirectory("graft-badman").toString
     val clock = new TestClock(11999L)
@@ -854,4 +871,10 @@ class EngineSpec extends SparkTestBase {
     assert(plan.contains("PushedFilters: [") && plan.contains("EqualTo(tag0,cpu)"),
       s"tag predicate must reach the scan:\n$plan")
   }
+}
+
+/** Rows seen by the flaky tag source: the first evaluation of a row
+  * yields no tags (a reject), every later one a valid tuple. */
+object FlakyTags {
+  val seen: java.util.Set[Long] = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
 }

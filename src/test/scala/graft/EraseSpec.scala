@@ -135,7 +135,7 @@ class EraseSpec extends SparkTestBase {
     val delta = fs.listStatus(rollupDir)
       .map(_.getPath).filter(_.getName.startsWith("delta="))
       .minBy(_.getName) // delta=-1_<n> sorts first
-    assert(fs.rename(delta, new Path(rollupDir, s".erase_trash_${delta.getName}")))
+    assert(fs.rename(delta, graft.core.Publish.trashPath(delta)))
     // the chain is now broken — a rollup read fails loudly
     intercept[IllegalStateException] { e.rollup(11000L, 11100L, U1, 100L).collect() }
     // the next erase restores the delta first, then cascades
