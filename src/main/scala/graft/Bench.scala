@@ -20,9 +20,12 @@ import graft.sources.Tables
   * Output contract: ONE compact JSON line on stdout (driver parses the
   * tail, so values are rounded to ms to keep the line short) AND the
   * complete result — per-query samples, medians, environment — written
-  * to SPARK_GRAFT_BENCH_OUT (default /root/repo/BENCH_FULL.json):
-  * stdout tails get truncated (BENCH_r05 lost 56/117 queries and
-  * parsed as null), the file never does.
+  * to SPARK_GRAFT_BENCH_OUT (default `BENCH_FULL_c<cpus>.json` in the
+  * working directory, one file per core count, so an 8-core run does
+  * not overwrite the 32-core map): stdout tails get truncated
+  * (BENCH_r05 lost 56/117 queries and parsed as null), the file never
+  * does. The summary line's `queries_file` is the absolute path
+  * written.
   */
 object Bench {
   private def median(xs: Seq[Double]): Double = {
@@ -63,7 +66,8 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "3").toInt
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/BENCH_FULL.json")
+    val outPath = Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", s"BENCH_FULL_c$cpus.json"))
+      .toAbsolutePath.toString
     val spark = graft.core.EngineSession.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
 
@@ -136,7 +140,7 @@ object Bench {
       .withDefaultValue(Vector.empty)
     var lastPassSec = elapsed // the warmup pass approximates one pass
     var done = 0
-    // checkpoint BENCH_FULL.json after every pass: an external kill
+    // checkpoint the full record after every pass: an external kill
     // (driver wall-clock, OOM reaper) must cost at most the pass in
     // flight, never the whole run — r6 lost nothing only by luck
     def writeFull(doneSoFar: Int, stopped: Boolean): Unit = {

@@ -309,10 +309,15 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
   private def mutate[T](body: => T): T =
     writeLock.synchronized(withWriterLease(body))
 
-  def put(points: DataFrame): Map[String, Long] = writeLock.synchronized {
-    ensureManifest(adopt = true)
-    putClassified(classify(points))
-  }
+  def put(points: DataFrame): Map[String, Long] = put(points, driverHeld = false)
+
+  /** `driverHeld`: `points` is the one partition the `Seq[Point]`
+    * overload builds, so [[putClassified]] skips its shuffle by bucket. */
+  private def put(points: DataFrame, driverHeld: Boolean): Map[String, Long] =
+    writeLock.synchronized {
+      ensureManifest(adopt = true)
+      putClassified(classify(points), driverHeld)
+    }
 
   // ------------------------------------------------------------------
   // Options manifest (dbase/dbase.go:56-74 — New validates Options
@@ -402,7 +407,7 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
   private val putReasons = Seq(Ok, InvalidTimestamp, InvalidIndexValues,
     InvalidPayload, InvalidSeq, WriteOnReadOnly)
 
-  private def putClassified(classified: DataFrame): Map[String, Long] = {
+  private def putClassified(classified: DataFrame, driverHeld: Boolean): Map[String, Long] = {
     // ONE pass for ledger AND write (r15, guide §1.2 step 1 / §1.4):
     // the write job itself carries a CollectMetrics (observe) node
     // BELOW the accept filter, so per-reason counts (a closed set) and
@@ -425,11 +430,15 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     // write-amplification bug that quietly destroys read latency).
     // One shuffle keyed by bucket → ~filesPerBucket files per bucket
     // per batch; a series-hash subkey spreads bulk backfills over
-    // multiple writer tasks per bucket when configured.
+    // multiple writer tasks per bucket when configured. A driver-held
+    // batch is one partition, so its one task already writes one file
+    // per bucket: the shuffle (a job of its own, plus AQE's re-plan)
+    // would only coalesce it back to that same single task.
     val keyed =
-      if (opts.filesPerBucket <= 1) projected.repartition(col("bucket_ts"))
-      else projected.repartition(col("bucket_ts"),
+      if (opts.filesPerBucket > 1) projected.repartition(col("bucket_ts"),
         pmod(hash(tagCols.map(col): _*), lit(opts.filesPerBucket)))
+      else if (driverHeld) projected
+      else projected.repartition(col("bucket_ts"))
     // Cluster rows by (series, slot) WITHIN each writer task: parquet
     // row-group min/max stats then prune single-series gets on fresh
     // ingest files, not just post-compaction rewrites (compaction
@@ -496,8 +505,10 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     * arrival (e.g. id-derived seqs across micro-batches) would leave
     * retro-seq rows permanently unfolded. Engine allocation makes
     * arrival order and seq order coincide by construction. Costs one
-    * extra pass (count + zipWithIndex) over the batch — the price of
-    * a dense, gap-bounded block reservation. */
+    * extra job over the cached batch (a per-partition sizing pass that
+    * fixes each partition's seq offset) — the price of a dense,
+    * gap-bounded block reservation. The batch's partitioning is
+    * unknown, so its write keeps the shuffle by bucket. */
   def putAllocated(points: DataFrame): Map[String, Long] = writeLock.synchronized {
     val pts = points.select(col("ts"), col("tags"), col("payload")).persist()
     try {
@@ -528,15 +539,16 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
 
   /** Driver-side convenience for tests / embedded use: seq is the
     * position in the call order, mirroring the reference's sequential
-    * Put loop. */
+    * Put loop. The batch is already in driver memory, so it becomes
+    * one partition and, unless filesPerBucket asks for more writers,
+    * is written by one task in one job (see [[putClassified]]). */
   def put(points: Seq[Point]): Map[String, Long] = {
     val base = nextSeqBlock(points.size.toLong)
     val rows = points.zipWithIndex.map { case (p, i) =>
       org.apache.spark.sql.Row(p.ts, p.tags, p.payload, base + i)
     }
-    put(spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, math.max(1, math.min(points.size, 4))),
-      pointSchema))
+    put(spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), pointSchema),
+      driverHeld = true)
   }
 
   // Ingest sequence must keep increasing across engine instances or a
@@ -698,8 +710,10 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
   }
 
   /** Highest ingest sequence on disk (−1 when the table is empty): the
-    * snapshot watermark for getAsOf/findAsOf. Served from parquet
-    * column statistics — no data scan. */
+    * snapshot watermark for getAsOf/findAsOf. An aggregate scan of the
+    * seq column over every batch file (two Spark jobs under AQE: the
+    * partial aggregate, then the final one), not a statistics lookup —
+    * keep it off per-epoch paths. */
   def currentSeq(): Long = {
     val row = table().agg(max(col("seq"))).head()
     if (row.isNullAt(0)) -1L else row.getLong(0)
@@ -1394,7 +1408,18 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     * lookup is the only table read, pruned to the delta's slot/bucket
     * range and semi-joined to its keys — O(buckets the delta touches),
     * not O(table). XOR cancellation is safe for the same reason
-    * [[lwwChecksum]]'s is: winners are unique per key on each side. */
+    * [[lwwChecksum]]'s is: winners are unique per key on each side.
+    *
+    * Caveat: `nNew`/`xNew` are the export write job's observed metrics
+    * (CollectMetrics accumulators), which Spark does not guarantee to
+    * count exactly once when a stage is retried or speculated. Local
+    * sessions never retry, but on a cluster a retried stage can fold a
+    * partition's count and XOR term twice into the chain, and the
+    * receipt then no longer matches the primary. [[verifyReceipt]] is
+    * the read-back check to use on clusters: it recomputes the
+    * replica's checksum from the rows it holds, so a miscounted
+    * receipt fails it (a divergence alarm whose remedy, a full
+    * re-sync, also re-seeds the chain). Run it after every import. */
   private def incrementalChecksum(fromSeq: Long, deltaDf: DataFrame,
       prevRows: Long, prevHash: Long,
       nNew: Long, xNew: Long, loOpt: Option[Long], hiOpt: Option[Long]): (Long, Long) = {
@@ -1736,6 +1761,15 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     * batch files are immutable with tight seq ranges, so parquet
     * row-group stats skip every already-folded batch.
     *
+    * One scan: the fold's write job observes the highest seq it folded
+    * beside its row count, and the delta publishes as
+    * `delta=<wm>_<that max>` ([[Publish.observedNamed]]). The name
+    * therefore covers exactly the rows in the delta, even when a
+    * lease-free put from another engine publishes a batch while the
+    * fold runs; naming the range from a separate max-seq scan would
+    * fold such a batch under the old range and again on the next
+    * refresh. An empty fold publishes nothing.
+    *
     * Semantics: the rollup aggregates the OBSERVATION STREAM — every
     * accepted write is one sample, so cnt/sum/min/max count
     * superseded LWW duplicates too (additive partials cannot retract;
@@ -1753,8 +1787,6 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     ensureRollupOptions(rollupResolution, adopt = true)
     val fs = tableFs
     val wm = rollupCover(rollupDeltas(fs)).lastOption.map(_._3).getOrElse(-1L)
-    val cur = currentSeq()
-    if (cur <= wm) return 0L
     val partials = table()
       .filter(col("seq") > wm)
       .withColumn("value", call_function("double_from_payload", col("payload")))
@@ -1772,14 +1804,14 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
         col("vmin") :+ col("vmax") :+ col("__lw.seq").as("last_seq") :+
         col("__lw.value").as("last_val") :+
         col("bucket_ts"): _*)
-    // r15: the published-row count (the return value) rides the write
-    // job as an observed metric — no footer-count job per refresh
+    // the published-row count (the return value) and the delta's upper
+    // seq bound ride the write job as observed metrics
     val obs = new org.apache.spark.sql.Observation()
-    Publish.observed(fs, new Path(s"$rollupPath/delta=${wm}_$cur")) { p =>
-      partials.observe(obs, count(lit(1)).as("n"))
+    Publish.observedNamed(fs, new Path(s"$rollupPath/delta=${wm}_")) { p =>
+      partials.observe(obs, count(lit(1)).as("n"), max(col("last_seq")).as("hi"))
         .write.mode(SaveMode.Overwrite).partitionBy("bucket_ts").parquet(p.toString)
       obs.get
-    }(_ => true).getOrElse("n", 0L).asInstanceOf[Long]
+    }(m => Option(m("hi")).map(hi => s"delta=${wm}_$hi")).getOrElse("n", 0L).asInstanceOf[Long]
   }
 
   /** Merge-on-read rollup query: final (series, rollup-slot) rows over

@@ -11,7 +11,9 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * as `<parent>/.graft_trash_<name>`. Both names start with a dot, so
   * Spark's file listing never reads them, and both encode the target's
   * name, so a heal of a shared parent (the data dir holding many
-  * databases) only ever touches the dirs of the targets it owns.
+  * databases) only ever touches the dirs of the targets it owns. A
+  * target whose name the write job's metrics complete
+  * ([[observedNamed]]) stages under the known prefix of that name.
   *
   * Crash contract.
   *  - A crash or exception before the first rename leaves the target
@@ -70,7 +72,7 @@ private[graft] object Publish {
     * first rename (the writer-lease check of destructive verbs). */
   def dir(fs: FileSystem, target: Path, replace: Boolean = false,
       fence: () => Unit = () => ())(write: Path => Unit): Unit =
-    run(fs, target, replace, fence)(write)(true)
+    run(fs, target, replace, fence)(write)(Some(target))
 
   /** [[dir]] for a verb whose write job observes metrics: `write`
     * returns them (empty when absent), `decide` sees present metrics
@@ -78,21 +80,36 @@ private[graft] object Publish {
     * Returns the metrics. */
   def observed(fs: FileSystem, target: Path, replace: Boolean = false,
       fence: () => Unit = () => ())(write: Path => Map[String, Any])(
-      decide: Map[String, Any] => Boolean): Map[String, Any] = {
+      decide: Map[String, Any] => Boolean): Map[String, Any] =
+    observedNamed(fs, target, replace, fence)(write)(m =>
+      if (decide(m)) Some(target.getName) else None)
+
+  /** [[observed]] where the metrics name the target, such as a fresh
+    * seq-range dir whose upper end is the highest seq the write job
+    * saw: the staging dir is named after `stem`, and `name` maps
+    * present metrics to the target's name under `stem`'s parent, or
+    * to None to discard. */
+  def observedNamed(fs: FileSystem, stem: Path, replace: Boolean = false,
+      fence: () => Unit = () => ())(write: Path => Map[String, Any])(
+      name: Map[String, Any] => Option[String]): Map[String, Any] = {
     var m = Map.empty[String, Any]
-    run(fs, target, replace, fence)(staging => m = write(staging))(m.nonEmpty && decide(m))
+    run(fs, stem, replace, fence)(staging => m = write(staging))(
+      if (m.nonEmpty) name(m).map(new Path(stem.getParent, _)) else None)
     m
   }
 
-  private def run(fs: FileSystem, target: Path, replace: Boolean, fence: () => Unit)(
-      write: Path => Unit)(decide: => Boolean): Unit = {
-    val staging = stagingPath(target)
+  /** Stage under `stem`'s name, then publish at the target `decide`
+    * returns, if any. The fault points up to the decision report
+    * `stem`, the rename points the target. */
+  private def run(fs: FileSystem, stem: Path, replace: Boolean, fence: () => Unit)(
+      write: Path => Unit)(decide: => Option[Path]): Unit = {
+    val staging = stagingPath(stem)
     try {
       write(staging)
-      faultHook(Point.Stage, target)
+      faultHook(Point.Stage, stem)
       val go = decide
-      faultHook(Point.AfterMetrics, target)
-      if (go) {
+      faultHook(Point.AfterMetrics, stem)
+      go.foreach { target =>
         fence()
         faultHook(Point.BeforeRename, target)
         if (!fs.exists(target)) rename(fs, staging, target)

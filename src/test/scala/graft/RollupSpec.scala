@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
 import graft.core._
 
@@ -156,6 +157,69 @@ class RollupSpec extends SparkTestBase {
         rows(b.rollup(10000L, 12000L, T, 100L)),
         s"seed=$seed cut=$cut: split refreshes must merge to the single-refresh result")
     }
+  }
+
+  /** Explicit-seq put of (ts, value, seq) points of series T. */
+  private def putSeqs(e: Engine, pts: (Long, Double, Long)*): Unit = {
+    val rows = pts.map { case (ts, v, sq) =>
+      org.apache.spark.sql.Row(ts, T, java.nio.ByteBuffer.allocate(8).putDouble(v).array(), sq)
+    }
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+      "ts BIGINT, tags ARRAY<STRING>, payload BINARY, seq BIGINT")
+    assert(e.put(spark.createDataFrame(spark.sparkContext.parallelize(rows), schema))
+      === Map("ok" -> pts.size.toLong))
+  }
+
+  /** The rollup's delta dirs as (name, lo, hi), in chain order. */
+  private def deltas(e: Engine): Seq[(java.io.File, Long, Long)] =
+    new java.io.File(s"${e.opts.tablePath}_rollup").listFiles().toSeq
+      .filter(_.getName.startsWith("delta="))
+      .map { d =>
+        val Array(lo, hi) = d.getName.stripPrefix("delta=").split("_")
+        (d, lo.toLong, hi.toLong)
+      }.sortBy(_._2)
+
+  test("each delta is named by the highest seq it holds; the chain stays contiguous") {
+    val (e, _) = mkEngine()
+    putSeqs(e, (11000L, 1.0, 5L), (11010L, 2.0, 9L))
+    assert(e.refreshRollup(100L) === 1L)
+    putSeqs(e, (11100L, 3.0, 20L), (11000L, 4.0, 14L)) // out of order, gaps
+    assert(e.refreshRollup(100L) === 2L)
+    putSeqs(e, (11200L, 5.0, 40L), (11210L, 6.0, 31L))
+    assert(e.refreshRollup(100L) === 1L)
+    val ds = deltas(e)
+    assert(ds.map { case (_, lo, hi) => (lo, hi) } === Seq((-1L, 9L), (9L, 20L), (20L, 40L)))
+    ds.foreach { case (d, _, hi) =>
+      val stored = spark.read.parquet(d.getPath).agg(
+        org.apache.spark.sql.functions.max("last_seq")).head().getLong(0)
+      assert(stored === hi, s"${d.getName} holds seqs up to $stored")
+    }
+    assert(rows(e.rollup(11000L, 11300L, T, 100L)) === Seq(
+      (11000L, 3L, 7.0, 1.0, 4.0, 4.0, 7.0 / 3),
+      (11100L, 1L, 3.0, 3.0, 3.0, 3.0, 3.0),
+      (11200L, 2L, 11.0, 5.0, 6.0, 5.0, 5.5)))
+  }
+
+  test("a refresh with nothing new returns 0 and leaves the rollup byte-for-byte unchanged") {
+    val (e, _) = mkEngine()
+    e.putDoubles(Seq((11000L, T, 1.0), (11110L, T, 2.0)))
+    assert(e.refreshRollup(100L) === 2L)
+    val root = java.nio.file.Paths.get(s"${e.opts.tablePath}_rollup")
+    def snapshot(): Map[String, Seq[Byte]] = {
+      val st = Files.walk(root)
+      try st.iterator().asScala.filter(Files.isRegularFile(_)).map(p =>
+        root.relativize(p).toString -> Files.readAllBytes(p).toSeq).toMap
+      finally st.close()
+    }
+    def entries(): Seq[String] = {
+      val st = Files.walk(root)
+      try st.iterator().asScala.map(root.relativize(_).toString).toList.sorted
+      finally st.close()
+    }
+    val (files, names) = (snapshot(), entries())
+    assert(e.refreshRollup(100L) === 0L)
+    assert(entries() === names)
+    assert(snapshot() === files)
   }
 
   test("rollup resolution is a guarded layout property of the rollup table") {
