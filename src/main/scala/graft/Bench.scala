@@ -50,7 +50,12 @@ object Bench {
     pos.size >= 2 && pos.min > 0 && pos.max / pos.min > 3.0
   }
 
-  private def qJson(v: Seq[Double]): String = {
+  /** Janino compiles so far in this JVM (every generated class Spark
+    * did not find in its codegen cache). */
+  private def compileCount: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  private def qJson(v: Seq[Double], compiles: Long): String = {
     val pos = v.filter(_ >= 0)
     // min rides along beside the median: min-of-samples is the
     // contention-robust lower bound next-round regression triage
@@ -59,6 +64,9 @@ object Bench {
     "{\"median\":" + r3(median(pos)) +
       (if (pos.nonEmpty) ",\"min\":" + r3(pos.min) else "") +
       ",\"samples\":" + v.map(r3).mkString("[", ",", "]") +
+      // codegen compiles over the timed passes: 0 once a query's plan
+      // shapes sit in the codegen cache and its code is data-independent
+      ",\"compiles\":" + compiles +
       (if (isOutlier(v)) ",\"outlier\":true" else "") + "}"
   }
 
@@ -138,6 +146,18 @@ object Bench {
     // a failed query reports -1.0, never a fake timing
     val samplesByQuery = scala.collection.mutable.Map[String, Vector[Double]]()
       .withDefaultValue(Vector.empty)
+    val compilesByQuery = scala.collection.mutable.Map[String, Long]().withDefaultValue(0L)
+    /** One timed run of `name`: its seconds (-1.0 when it failed), and
+      * its codegen compiles added to the query's count. */
+    def timed(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+        what: String): Double = {
+      val c0 = compileCount
+      try runOnce(fn)
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name ${what}FAILED: ${e.getMessage}")
+        -1.0
+      } finally compilesByQuery(name) += compileCount - c0
+    }
     var lastPassSec = elapsed // the warmup pass approximates one pass
     var done = 0
     // checkpoint the full record after every pass: an external kill
@@ -149,7 +169,7 @@ object Bench {
       val meds = rs.map { case (k, v) =>
         k -> (if (v.nonEmpty && v.forall(_ >= 0)) median(v) else -1.0) }
       val tot = r3(meds.collect { case (_, v) if v >= 0 => v }.sum)
-      val sj = rs.map { case (k, v) => s"\"" + k + "\":" + qJson(v) }
+      val sj = rs.map { case (k, v) => s"\"" + k + "\":" + qJson(v, compilesByQuery(k)) }
         .mkString("{", ",", "}")
       val meta = s""""passes_configured":$passes,"passes_done":$doneSoFar,"budget_stopped":$stopped"""
       val json =
@@ -173,13 +193,7 @@ object Bench {
       val order = new scala.util.Random(0x9E3779B9L + done)
         .shuffle(sorted)
       order.foreach { case (name, fn) =>
-        val s =
-          try runOnce(fn)
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-            -1.0
-          }
-        samplesByQuery(name) = samplesByQuery(name) :+ s
+        samplesByQuery(name) = samplesByQuery(name) :+ timed(name, fn, "")
       }
       lastPassSec = elapsed - passStart
       done += 1
@@ -203,12 +217,7 @@ object Bench {
       flagged.zip(perQuerySec).foreach { case ((name, fn), est) =>
         if (elapsed + est <= budgetSec) {
           (1 to 2).foreach { _ =>
-            val sm =
-              try runOnce(fn)
-              catch { case e: Throwable =>
-                System.err.println(s"[bench] $name rescue FAILED: ${e.getMessage}")
-                -1.0
-              }
+            val sm = timed(name, fn, "rescue ")
             // a failed RESCUE sample is dropped, never appended: the
             // medians gate on v.forall(_ >= 0), so one dead extra pass
             // (likely under the very contention that triggered the
@@ -253,7 +262,7 @@ object Bench {
       s"""{"metric":"total_median","value":$total,"value_min":$minTotal,"unit":"sec",$passMeta,"queries":$qs,"sf":"$sfDir"}"""
     // full record (every sample, not just the median) → file: stdout
     // tails truncate, this is the adjudicable artifact
-    val samplesJson = results.map { case (k, v) => s"\"" + k + "\":" + qJson(v) }
+    val samplesJson = results.map { case (k, v) => s"\"" + k + "\":" + qJson(v, compilesByQuery(k)) }
       .mkString("{", ",", "}")
     val fileJson =
       s"""{"metric":"total_median","value":$total,"value_min":$minTotal,"unit":"sec",$passMeta,"cpus":$cpus,"sf":"$sfDir","queries":$samplesJson}"""

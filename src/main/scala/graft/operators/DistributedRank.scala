@@ -26,30 +26,75 @@ import org.apache.spark.sql.functions._
   * key; this one only needs a total order). */
 object DistributedRank {
 
+  /** The shared decomposition. Range-partitions `df` by `order`, tags
+    * each row with its partition id `__pid`, lets `local` add the
+    * partition-local window columns, and pins the result with a LAZY
+    * localCheckpoint. ONE narrow job over the checkpoint then
+    * materializes it and returns, per non-empty `__pid`, its row count
+    * and its total of each `totals` column (nulls skipped, folded with
+    * `combine` from 0). No eager checkpoint job and no groupBy
+    * exchange: the final pass reads the same pinned partitions the
+    * totals came from.
+    *
+    * Returns the pinned frame, the total row count, and the exclusive
+    * cumulative offset columns: first by row count, then one per
+    * `totals` column. The offsets change on every run —
+    * RangePartitioner seeds its sample from the RDD id — so they are
+    * looked up in ONE array literal by `__pid`: Spark keeps an array
+    * literal in the generated class's reference table, while it writes
+    * a primitive literal into the class's source, so one literal per
+    * offset would make every run compile new classes. */
+  private def pinned(df: DataFrame, order: Seq[Column], totals: Seq[String],
+      combine: (Long, Long) => Long)(local: DataFrame => DataFrame)
+      : (DataFrame, Long, Seq[Column]) = {
+    val parts = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val frame = local(df.repartitionByRange(parts, order: _*)
+        .withColumn("__pid", spark_partition_id()))
+      .localCheckpoint(eager = false)
+    val schema = frame.schema
+    val pidAt = schema.fieldIndex("__pid")
+    val at = totals.map(c => (schema.fieldIndex(c), schema(c).dataType)).toArray
+    // the window's exchange on __pid may hold several pids per task
+    val perPid = frame.queryExecution.toRdd.mapPartitions { rows =>
+      val acc = scala.collection.mutable.HashMap.empty[Int, Array[Long]]
+      rows.foreach { row =>
+        val t = acc.getOrElseUpdate(row.getInt(pidAt), new Array[Long](at.length + 1))
+        t(0) += 1
+        var i = 0
+        while (i < at.length) {
+          val (ord, dt) = at(i)
+          if (!row.isNullAt(ord))
+            t(i + 1) = combine(t(i + 1), row.get(ord, dt).asInstanceOf[Number].longValue)
+          i += 1
+        }
+      }
+      acc.iterator
+    }.collect().sortBy(_._1)
+    val nPids = perPid.lastOption.fold(0)(_._1 + 1)
+    val offsets = (0 to totals.size).map { i =>
+      val off = new Array[Long](nPids)
+      perPid.foldLeft(0L) { case (cum, (pid, t)) => off(pid) = cum; cum + t(i) }
+      element_at(typedLit(off), col("__pid") + 1)
+    }
+    (frame, perPid.map(_._2(0)).sum, offsets)
+  }
+
+  /** [[withGlobalRank]] plus the total row count, which the offsets
+    * already sum up. */
+  private def globalRank(df: DataFrame, rankName: String,
+      order: Seq[Column]): (DataFrame, Long) = {
+    val (local, n, Seq(off)) = pinned(df, order, Nil, _ + _)(
+      _.withColumn("__lr", row_number().over(
+        Window.partitionBy(col("__pid")).orderBy(order: _*))))
+    (local.withColumn(rankName, off + col("__lr")).drop("__pid", "__lr"), n)
+  }
+
   /** df + `rankName` column holding the exact 1-based global rank by
     * `order` (which MUST be a total order — add a unique tiebreak).
     * One range shuffle + one partitioned window; the input is
     * materialized via localCheckpoint at the branch point. */
-  def withGlobalRank(df: DataFrame, rankName: String, order: Seq[Column]): DataFrame = {
-    val parts = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val local = df.repartitionByRange(parts, order: _*)
-      .withColumn("__pid", spark_partition_id())
-      .withColumn("__lr", row_number().over(
-        Window.partitionBy(col("__pid")).orderBy(order: _*)))
-      .localCheckpoint()
-    val counts = local.groupBy(col("__pid")).agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val offsets = counts.keys.toSeq.sorted
-      .scanLeft((Int.MinValue, 0L)) { case ((_, acc), pid) =>
-        (pid, acc + counts(pid))
-      }
-      .sliding(2).collect { case Seq((_, acc), (pid, _)) => (pid, acc) }
-      .toMap
-    val offCol = offsets.foldLeft(lit(0L)) { case (c, (pid, off)) =>
-      when(col("__pid") === pid, lit(off)).otherwise(c)
-    }
-    local.withColumn(rankName, offCol + col("__lr")).drop("__pid", "__lr")
-  }
+  def withGlobalRank(df: DataFrame, rankName: String, order: Seq[Column]): DataFrame =
+    globalRank(df, rankName, order)._1
 
   /** df + `rankName` = exact 1-based global DENSE rank by `order` —
     * equal keys share a rank, ranks are consecutive over the distinct
@@ -67,25 +112,10 @@ object DistributedRank {
     * rank over the same total order. */
   def withGlobalDenseRank(df: DataFrame, rankName: String,
       order: Seq[Column]): DataFrame = {
-    val parts = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val local = df.repartitionByRange(parts, order: _*)
-      .withColumn("__pid", spark_partition_id())
-      .withColumn("__ldr", dense_rank().over(
-        Window.partitionBy(col("__pid")).orderBy(order: _*)))
-      .localCheckpoint()
-    val counts = local.groupBy(col("__pid"))
-      .agg(max(col("__ldr")).as("n")) // distinct keys in partition
-      .collect().map(r => r.getInt(0) -> r.getInt(1).toLong).toMap
-    val offsets = counts.keys.toSeq.sorted
-      .scanLeft((Int.MinValue, 0L)) { case ((_, acc), pid) =>
-        (pid, acc + counts(pid))
-      }
-      .sliding(2).collect { case Seq((_, acc), (pid, _)) => (pid, acc) }
-      .toMap
-    val offCol = offsets.foldLeft(lit(0L)) { case (c, (pid, off)) =>
-      when(col("__pid") === pid, lit(off)).otherwise(c)
-    }
-    local.withColumn(rankName, offCol + col("__ldr")).drop("__pid", "__ldr")
+    val (local, _, Seq(_, off)) = pinned(df, order, Seq("__ldr"), math.max)(
+      _.withColumn("__ldr", dense_rank().over(
+        Window.partitionBy(col("__pid")).orderBy(order: _*))))
+    local.withColumn(rankName, off + col("__ldr")).drop("__pid", "__ldr")
   }
 
   /** df + `outName` = exact EXCLUSIVE running sum of `valueCol` in
@@ -99,29 +129,8 @@ object DistributedRank {
     * Replaces `sum() OVER (ORDER BY …)` — the other single-partition
     * window shape — with one range shuffle. */
   def withPrefixSum(df: DataFrame, valueCol: Column, outName: String,
-      order: Seq[Column]): DataFrame = {
-    val parts = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val local = df.repartitionByRange(parts, order: _*)
-      .withColumn("__pid", spark_partition_id())
-      .withColumn("__v", valueCol.cast("long"))
-      .withColumn("__ps", sum(col("__v")).over(
-        Window.partitionBy(col("__pid")).orderBy(order: _*)
-          .rowsBetween(Window.unboundedPreceding, -1)))
-      .localCheckpoint()
-    val totals = local.groupBy(col("__pid")).agg(sum(col("__v")).as("t"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val offsets = totals.keys.toSeq.sorted
-      .scanLeft((Int.MinValue, 0L)) { case ((_, acc), pid) =>
-        (pid, acc + totals(pid))
-      }
-      .sliding(2).collect { case Seq((_, acc), (pid, _)) => (pid, acc) }
-      .toMap
-    val offCol = offsets.foldLeft(lit(0L)) { case (c, (pid, off)) =>
-      when(col("__pid") === pid, lit(off)).otherwise(c)
-    }
-    local.withColumn(outName, offCol + coalesce(col("__ps"), lit(0L)))
-      .drop("__pid", "__v", "__ps")
-  }
+      order: Seq[Column]): DataFrame =
+    withPrefixSums(df, Seq(valueCol -> outName), order)
 
   /** Multi-column variant of [[withPrefixSum]]: ONE range shuffle
     * computes an exact exclusive prefix sum for EACH (valueCol →
@@ -133,39 +142,18 @@ object DistributedRank {
   def withPrefixSums(df: DataFrame, sums: Seq[(Column, String)],
       order: Seq[Column]): DataFrame = {
     require(sums.nonEmpty)
-    val parts = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val w = Window.partitionBy(col("__pid")).orderBy(order: _*)
       .rowsBetween(Window.unboundedPreceding, -1)
-    val staged = sums.zipWithIndex.foldLeft(
-      df.repartitionByRange(parts, order: _*)
-        .withColumn("__pid", spark_partition_id())) {
-      case (acc, ((c, _), i)) =>
+    val (local, _, offs) = pinned(df, order, sums.indices.map(i => s"__v$i"), _ + _)(
+      sums.zipWithIndex.foldLeft(_) { case (acc, ((c, _), i)) =>
         acc.withColumn(s"__v$i", c.cast("long"))
           .withColumn(s"__ps$i", sum(col(s"__v$i")).over(w))
+      })
+    val out = sums.zip(offs.tail).zipWithIndex.foldLeft(local) {
+      case (acc, (((_, name), off), i)) =>
+        acc.withColumn(name, off + coalesce(col(s"__ps$i"), lit(0L)))
     }
-    val local = staged.localCheckpoint()
-    val totAggs = sums.indices.map(i => sum(col(s"__v$i")).as(s"t$i"))
-    val totals = local.groupBy(col("__pid"))
-      .agg(totAggs.head, totAggs.tail: _*)
-      .collect()
-      .map(r => r.getInt(0) -> sums.indices.map(i => r.getLong(i + 1)))
-      .toMap
-    val pids = totals.keys.toSeq.sorted
-    val out = sums.zipWithIndex.foldLeft(local) { case (acc, ((_, name), i)) =>
-      val offsets = pids
-        .scanLeft((Int.MinValue, 0L)) { case ((_, cum), pid) =>
-          (pid, cum + totals(pid)(i))
-        }
-        .sliding(2).collect { case Seq((_, cum), (pid, _)) => (pid, cum) }
-        .toMap
-      val offCol = offsets.foldLeft(lit(0L)) { case (c, (pid, off)) =>
-        when(col("__pid") === pid, lit(off)).otherwise(c)
-      }
-      acc.withColumn(name, offCol + coalesce(col(s"__ps$i"), lit(0L)))
-    }
-    sums.indices.foldLeft(out.drop("__pid")) { (acc, i) =>
-      acc.drop(s"__v$i", s"__ps$i")
-    }
+    out.drop("__pid" +: sums.indices.flatMap(i => Seq(s"__v$i", s"__ps$i")): _*)
   }
 
   /** df + `tileName` = exact SQL-ntile(k) bucket by `order` (total
@@ -173,8 +161,7 @@ object DistributedRank {
     * remainder rule. */
   def withNtile(df: DataFrame, tileName: String, k: Int, order: Seq[Column]): DataFrame = {
     require(k > 0)
-    val ranked = withGlobalRank(df, "__r", order)
-    val n = ranked.count() // served from the checkpoint, no recompute
+    val (ranked, n) = globalRank(df, "__r", order)
     val base = n / k
     val rem = n % k
     val cut = rem * (base + 1)

@@ -43,10 +43,10 @@ object SuffixRank {
   def prefixDoublingRanks(tok: DataFrame, L: Int): DataFrame = {
     require(L >= 1 && (L & (L - 1)) == 0, s"L must be a power of two, got $L")
     // NO outer localCheckpoint here: withGlobalDenseRank already
-    // checkpoints internally (it must — the offsets map and the final
-    // pass must see one physical partitioning), so the per-round state
-    // is materialized exactly once and the select on top is a pure
-    // projection over the checkpointed RDD. A second eager checkpoint
+    // pins its partitions with a localCheckpoint (it must — the offsets
+    // and the final pass must see one physical partitioning), so the
+    // per-round state is materialized exactly once and the select on
+    // top is a pure projection over the checkpointed RDD. A second eager checkpoint
     // per round re-materialized every row — measured as the whole
     // regression of llm_suffix_array at sf0.1.
     var suf = DistributedRank.withGlobalDenseRank(tok, "r", Seq(col("tok")))

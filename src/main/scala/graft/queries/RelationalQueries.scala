@@ -2285,8 +2285,10 @@ object RelationalQueries extends QueryModule {
     * LEFT ANTI against the visited set — a node is expanded exactly
     * once, so total work is O(edges · 1) regardless of path count,
     * while the oracle's WITH RECURSIVE enumerates (node, hop) pairs
-    * and dedups per level (UNION recursion). Frontier and visited
-    * localCheckpoint per round (iterative-lineage discipline).
+    * and dedups per level (UNION recursion). Each round's new frontier
+    * is localCheckpointed (iterative-lineage discipline); the visited
+    * set is the plain union of those checkpointed frames, so it needs
+    * no checkpoint job of its own.
     * Output: per-hop node census — rows only for reached hops. */
   private val qGraphReachability = QueryDef(
     "q_graph_reachability",
@@ -2318,7 +2320,7 @@ object RelationalQueries extends QueryModule {
           .join(bc(dist.select(col("node"))), Seq("node"), "left_anti")
           .withColumn("hop", lit(h))
           .localCheckpoint(true)
-        dist = dist.union(fresh).localCheckpoint(true)
+        dist = dist.union(fresh) // a union of checkpointed frames
         frontier = fresh
       }
       dist.groupBy(col("hop"))

@@ -2,13 +2,13 @@ package graft
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.operators.DistributedRank
+import graft.operators.{DistributedRank, SuffixRank}
 
 /** DistributedRank must reproduce row_number()/ntile() over a global
   * ORDER BY exactly — same ranks, same buckets, including the
   * N mod k remainder rule and duplicate sort keys — while planning
-  * no partition-less window. */
-class DistributedRankSpec extends SparkTestBase {
+  * no partition-less window, in a pinned number of Spark jobs. */
+class DistributedRankSpec extends JobCounting {
 
   // 103 rows (103 mod 5 = 3 exercises the remainder rule), duplicate
   // keys (id % 7) force the tiebreak to carry the total order
@@ -104,5 +104,32 @@ class DistributedRankSpec extends SparkTestBase {
     val got = DistributedRank.withNtile(tiny, "t", 5, Seq(col("k"), col("id")))
       .select("id", "t").collect().map(r => (r.getLong(0), r.getInt(1))).toSeq.sorted
     assert(got === Seq((0L, 1), (1L, 2), (2L, 3)))
+  }
+
+  // Job budgets of one call on a fixed input: the range sample, the
+  // map stages of the range exchange and of the window's exchange on
+  // __pid, and one narrow job over the pinned partitions that both
+  // returns the per-partition totals and materializes the checkpoint.
+  private def wide = spark.range(0, 2000, 1, 4).selectExpr("id", "id % 7 AS k")
+
+  test("one withGlobalDenseRank call runs four jobs") {
+    val (_, n) = jobs(DistributedRank.withGlobalDenseRank(wide, "r", Seq(col("k"))))
+    assert(n === 4, s"withGlobalDenseRank ran $n jobs")
+  }
+
+  test("one withPrefixSum call runs four jobs") {
+    val (_, n) = jobs(DistributedRank.withPrefixSum(wide, col("id"), "ps",
+      Seq(col("k"), col("id"))))
+    assert(n === 4, s"withPrefixSum ran $n jobs")
+  }
+
+  // four dense-rank calls plus the map stage of each of the three
+  // doubling rounds' lead() exchange on doc_id
+  test("one prefixDoublingRanks(L = 8) call runs 19 jobs") {
+    val tok = spark.range(0, 2000, 1, 4)
+      .selectExpr("id div 100 AS doc_id", "CAST(id % 100 + 1 AS INT) AS p",
+        "CAST(id * 7919 % 23 AS STRING) AS tok")
+    val (_, n) = jobs(SuffixRank.prefixDoublingRanks(tok, 8))
+    assert(n === 19, s"prefixDoublingRanks ran $n jobs")
   }
 }

@@ -2,41 +2,13 @@ package graft
 
 import java.io.File
 import java.nio.file.Files
-import scala.collection.concurrent.TrieMap
-import org.apache.spark.GraftTestBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
-import org.scalatest.BeforeAndAfterAll
 import graft.core._
 
 /** Spark job and file counts of the ingest path: a driver-held put
   * writes in one job, a DataFrame put keeps its shuffle by bucket, and
-  * a rollup refresh folds in one scan. Jobs are counted by a listener
-  * that only sees jobs submitted under a per-block local property. */
-class IngestJobSpec extends SparkTestBase with BeforeAndAfterAll {
-
-  private val TagKey = "graft.test.jobBlock"
-  private val started = TrieMap.empty[String, Int] // written by the one bus thread
-
-  private object JobCounter extends SparkListener {
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      Option(e.properties).flatMap(p => Option(p.getProperty(TagKey))).foreach { tag =>
-        started.update(tag, started.getOrElse(tag, 0) + 1)
-      }
-  }
-
-  override def beforeAll(): Unit = spark.sparkContext.addSparkListener(JobCounter)
-  override def afterAll(): Unit = spark.sparkContext.removeSparkListener(JobCounter)
-
-  /** `body`'s result and the number of Spark jobs it ran. */
-  private def jobs[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID().toString
-    sc.setLocalProperty(TagKey, tag)
-    val out = try body finally sc.setLocalProperty(TagKey, null)
-    GraftTestBus.drain(sc)
-    (out, started.getOrElse(tag, 0))
-  }
+  * a rollup refresh folds in one scan. */
+class IngestJobSpec extends JobCounting {
 
   private val now = 11999L
 
