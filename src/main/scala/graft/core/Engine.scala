@@ -605,7 +605,7 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     * damage for repair. */
   private def table(): DataFrame = {
     ensureManifest(adopt = false)
-    val fs = FileSystem.get(new java.net.URI(opts.dataDir), spark.sparkContext.hadoopConfiguration)
+    val fs = tableFs
     if (!fs.exists(new Path(opts.tablePath))) {
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], tableSchema)
     } else spark.read.schema(readerSchema)
@@ -623,7 +623,7 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     * whole 100 TB table. */
   def corruptFiles(): Seq[String] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs = FileSystem.get(new java.net.URI(opts.dataDir), conf)
+    val fs = tableFs
     val root = new Path(opts.tablePath)
     if (!fs.exists(root)) return Nil
     val bad = Seq.newBuilder[String]
@@ -1040,12 +1040,10 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     * Survivor rows are rewritten verbatim (raw seq history kept — no
     * LWW resolution happens here, so a later compaction behaves
     * identically); a bucket left empty loses its partition like
-    * retention. Rollup deltas are filtered in place by a [[Publish]]
-    * swap, preserving each delta's seq-range NAME — the watermark
-    * chain stays intact because those seqs WERE folded; the erased
-    * series simply no longer contributes rows. While a crashed swap
-    * leaves a delta missing, [[rollupCover]] fails loudly until the
-    * next heal puts it back.
+    * retention. Rollup deltas are filtered in place
+    * ([[SeqChain.rewrite]]), each keeping its seq-range name. While a
+    * crashed swap leaves a delta missing, the strict
+    * [[SeqChain.cover]] fails loudly until the next heal puts it back.
     *
     * Returns (per-bucket (rowsBefore, rowsAfter) for rewritten
     * buckets, rollup partial rows removed). Erasure of a tag tuple
@@ -1100,19 +1098,16 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
       }
     // cascade into every rollup delta that holds matching partials
     var rollupRemoved = 0L
-    rollupDeltas(fs).foreach { case (dir, _, _) =>
+    rollupDeltas.rewrite(fs, fenced) { link =>
       // basePath defaults to the delta dir itself: only bucket_ts= is
       // discovered as a partition (a rollupPath basePath would surface
       // the delta= level as a phantom column and corrupt the rewrite)
-      val delta = spark.read.schema(rollupSchema).parquet(dir.toString)
+      val delta = spark.read.schema(rollupSchema).parquet(link.path.toString)
       val n = matching(delta).count()
-      if (n > 0) {
-        rollupRemoved += n
-        Publish.dir(fs, dir, replace = true, fence = fenced) { p =>
-          surviving(delta).write.mode(SaveMode.Overwrite)
-            .partitionBy("bucket_ts").parquet(p.toString)
-        }
-      }
+      rollupRemoved += n
+      if (n == 0) None
+      else Some(p => surviving(delta).write.mode(SaveMode.Overwrite)
+        .partitionBy("bucket_ts").parquet(p.toString))
     }
     (rewritten, rollupRemoved)
   }
@@ -1135,16 +1130,15 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     * and the doomed rows still exist — re-running rollbackTo
     * completes the job; it is idempotent.
     *
-    * Rollup cascade: every delta whose folded seq range reaches past
-    * the watermark is dropped — by construction that is a SUFFIX of
-    * the delta chain, so [[rollupCover]] stays valid and the next
-    * [[refreshRollup]] re-folds the surviving rows from the cut
-    * point. (Contrast erase, which filters deltas in place: here the
-    * folded ranges themselves are wrong, not just one series.) The
-    * deltas are dropped BEFORE the raw buckets are rewritten, so a
-    * crash between the steps leaves rollup() missing-but-honest
-    * (under-covered, re-foldable) rather than serving aggregates
-    * that include rows find() already excludes.
+    * Rollup and index cascade: every delta and tombstone whose folded
+    * seq range reaches past the watermark is dropped
+    * ([[SeqChain.dropAbove]]), and the next refresh re-folds the
+    * surviving rows from the cut point. (Contrast erase, which filters
+    * deltas in place: here the folded ranges themselves are wrong, not
+    * just one series.) The links are dropped BEFORE the raw buckets
+    * are rewritten, so a crash between the steps leaves rollup()
+    * missing-but-honest (under-covered, re-foldable) rather than
+    * serving aggregates that include rows find() already excludes.
     *
     * Seq discipline: this INSTANCE keeps allocating above the old
     * maximum (no in-process reuse, so a held asOfSeq stays
@@ -1165,18 +1159,13 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     val hit = table().filter(col("seq") > asOfSeq)
       .groupBy(col("bucket_ts")).agg(count(lit(1)).as("n"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // Drop affected rollup deltas BEFORE the raw rewrite: a crash
-    // between the two steps then leaves MISSING aggregates (the next
-    // refreshRollup re-folds survivors) rather than a window where
-    // rollup() serves sums that still include rolled-back rows that
-    // find() already excludes.
+    // Drop the rollup's and the index's chain suffixes BEFORE the raw
+    // rewrite: a crash between the two steps then leaves MISSING
+    // derived rows (the next refresh re-folds survivors) rather than a
+    // window where rollup() or annSearch serves rows that find()
+    // already excludes.
     assertLeaseHeld() // fence: cascade drops begin
-    rollupDeltas(fs).foreach { case (dir, _, hi) =>
-      if (hi > asOfSeq) fs.delete(dir, true)
-    }
-    // ANN-index cascade: drop the chain suffix past the watermark
-    // (same ordering argument as the rollup deltas above)
-    rollbackVectorIndex(asOfSeq)
+    Seq(rollupDeltas, vindexDeltas, vindexTombs).foreach(_.dropAbove(fs, asOfSeq))
     val rewritten: Map[Long, (Long, Long)] =
       if (hit.isEmpty) Map.empty
       else {
@@ -1614,7 +1603,7 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     * per-trigger maintenance sweep idempotent and restart-safe (no
     * state to remember: the filesystem itself says what's folded). */
   def fragmentedColdBuckets(): Seq[Long] = {
-    val fs = FileSystem.get(new java.net.URI(opts.dataDir), spark.sparkContext.hadoopConfiguration)
+    val fs = tableFs
     coldBucketsOnDisk().filter(b => bucketDirs(fs, b).size > 1)
   }
 
@@ -1653,17 +1642,11 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
   // Design: the rollup is its own append-only sibling table
   // (<table>_rollup/delta=<lo>_<hi>/bucket_ts=<ns>/...) of PARTIAL
   // aggregates — count / sum / min / max / last-by-seq per
-  // (series, rollup-slot). Each refresh folds exactly the engine rows
-  // with ingest seq in (lo, hi] — the monotone seq column IS the
-  // exactly-once watermark, carried in the delta dir NAME, so there is
-  // no separate state file to corrupt and publishing the delta
-  // publishes its range. Reads merge partials on the fly
-  // (merge-on-read): counts/sums add, min/max fold, last resolves by
-  // max seq — all partial-agg-friendly, so the merge combines
-  // map-side. Overlapping ranges left by a crashed
-  // compaction are resolved by the greedy interval cover below, which
-  // always prefers the widest delta starting at the watermark chain's
-  // next link — additive counters are never double-counted.
+  // (series, rollup-slot). The deltas form a seq-range chain
+  // ([[SeqChain]]: naming, strict cover, compaction, cascades). Reads
+  // merge the cover's partials on the fly (merge-on-read): counts/sums
+  // add, min/max fold, last resolves by max seq — all
+  // partial-agg-friendly, so the merge combines map-side.
   // ------------------------------------------------------------------
 
   private def rollupPath = s"${opts.tablePath}_rollup"
@@ -1705,51 +1688,7 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     ensureRollupOptions(res, adopt = false)
   }
 
-  /** Committed seq-range dirs `<prefix><lo>_<hi>` under `root` as
-    * (path, loSeqExclusive, hiSeqInclusive) — the naming discipline
-    * shared by the rollup deltas and the vector-index deltas /
-    * tombstones: the folded range IS the directory name, so there is
-    * no separate watermark file to corrupt and one publish carries
-    * range + data together. */
-  private def seqRangeDirs(fs: FileSystem, root: Path,
-      prefix: String): Seq[(Path, Long, Long)] = {
-    if (!fs.exists(root)) return Seq.empty
-    fs.listStatus(root).toSeq.flatMap { st =>
-      val n = st.getPath.getName
-      if (!n.startsWith(prefix)) None
-      else n.stripPrefix(prefix).split("_", 2) match {
-        case Array(lo, hi) =>
-          scala.util.Try((st.getPath, lo.toLong, hi.toLong)).toOption
-        case _ => None
-      }
-    }
-  }
-
-  /** Committed delta dirs as (path, loSeqExclusive, hiSeqInclusive). */
-  private def rollupDeltas(fs: FileSystem): Seq[(Path, Long, Long)] =
-    seqRangeDirs(fs, new Path(rollupPath), "delta=")
-
-  /** Greedy interval cover of the seq axis: starting at the chain
-    * origin (lo = −1), repeatedly take the widest delta continuing
-    * the chain (lo == covered), skipping deltas a crashed compaction
-    * left fully behind the cover. A delta that OVERLAPS the cover
-    * boundary or a gap in the chain means manual tampering — fail
-    * loudly rather than serve a double-counted or partial aggregate. */
-  private def rollupCover(ds: Seq[(Path, Long, Long)]): Seq[(Path, Long, Long)] = {
-    val sorted = ds.sortBy { case (_, lo, hi) => (lo, -hi) }
-    var covered = -1L
-    val keep = Seq.newBuilder[(Path, Long, Long)]
-    sorted.foreach { case d @ (_, lo, hi) =>
-      if (hi > covered) {
-        if (lo != covered)
-          throw new IllegalStateException(
-            s"rollup delta chain broken at seq $covered (next delta covers ($lo, $hi])")
-        keep += d
-        covered = hi
-      } // else: fully covered (crashed-compaction leftover) — ignored
-    }
-    keep.result()
-  }
+  private def rollupDeltas = SeqChain(new Path(rollupPath), "delta=", "rollup")
 
   /** Incremental refresh: fold engine rows with seq > watermark into
     * a new delta of partial aggregates at `rollupResolution`. Exactly
@@ -1784,9 +1723,10 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
       s"rollup decodes double payloads (payloadSize=8; engine has ${opts.payloadSize})")
     require(rollupResolution > 0 && rollupResolution % opts.resolution == 0,
       "rollupResolution must be a positive multiple of resolution")
+    heal()
     ensureRollupOptions(rollupResolution, adopt = true)
     val fs = tableFs
-    val wm = rollupCover(rollupDeltas(fs)).lastOption.map(_._3).getOrElse(-1L)
+    val wm = rollupDeltas.cover(fs).lastOption.map(_.hi).getOrElse(-1L)
     val partials = table()
       .filter(col("seq") > wm)
       .withColumn("value", call_function("double_from_payload", col("payload")))
@@ -1825,8 +1765,7 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     ensureRollupOptions(rollupResolution, adopt = false)
     if (tags.size != opts.indexDepth)
       throw new IllegalArgumentException(InvalidIndexValues)
-    val fs = FileSystem.get(new java.net.URI(opts.dataDir), spark.sparkContext.hadoopConfiguration)
-    val cover = rollupCover(rollupDeltas(fs))
+    val cover = rollupDeltas.cover(tableFs)
     val s0 = start - start % rollupResolution
     val e0 = end - end % rollupResolution
     val base =
@@ -1835,7 +1774,7 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
       else spark.read.schema(rollupSchema)
         .option("basePath", rollupPath)
         .option("ignoreCorruptFiles", "true")
-        .parquet(cover.map(_._1.toString): _*)
+        .parquet(cover.map(_.path.toString): _*)
     val bs = s0 - s0 % opts.bucketDuration
     val be = e0 - e0 % opts.bucketDuration
     val preds = tagCols.zip(tags).collect { case (c, v) if v.nonEmpty => col(c) === v }
@@ -1863,7 +1802,9 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     * independent knobs. Same hot-window guard — the rollup of a
     * bucket still receiving writes must not vanish mid-refresh. An
     * emptied delta keeps its dir (the seq-range chain must stay
-    * unbroken for the cover); compaction folds empty links away. */
+    * unbroken for the cover); compaction folds empty links away. Heals
+    * first, so a delta a crashed swap left in trash loses its buckets
+    * too instead of bringing them back on the next heal. */
   def rollupRemoveBefore(ts: Long): Unit = mutate {
     ensureManifest(adopt = false)
     val now = clock.nowNs
@@ -1871,9 +1812,11 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     val minHot = nowBucket - opts.bucketDuration * (opts.maxHotBuckets - 1)
     if (ts > minHot)
       throw new IllegalArgumentException("err_remove_hot_bucket")
-    val fs = FileSystem.get(new java.net.URI(opts.dataDir), spark.sparkContext.hadoopConfiguration)
-    rollupDeltas(fs).foreach { case (delta, _, _) =>
-      fs.listStatus(delta).foreach { st =>
+    heal()
+    val fs = tableFs
+    assertLeaseHeld() // fence: bucket drops begin
+    rollupDeltas.links(fs).foreach { delta =>
+      fs.listStatus(delta.path).foreach { st =>
         val name = st.getPath.getName
         if (name.startsWith("bucket_ts=") &&
           name.stripPrefix("bucket_ts=").toLong < ts)
@@ -1882,28 +1825,18 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     }
   }
 
-  /** Fold the delta chain into one delta (same publish-then-delete
-    * discipline as [[compactBucket]]): merge-on-read cost drops to a
-    * single dir. Crash between publish and delete leaves an overlap
-    * the greedy cover resolves in the merged delta's favor (it starts
-    * at the chain origin and reaches the newest seq, so every
-    * original is "fully covered" and ignored) — additive partials are
-    * never double-counted, and the next compaction finishes the
-    * deletes. Returns the number of deltas folded (0 = nothing to do). */
+  /** Fold the delta chain into one delta ([[SeqChain.compact]]):
+    * merge-on-read cost drops to a single dir. Crashed-compaction
+    * leftovers are swept even when the chain is short. Returns the
+    * number of deltas folded (0 = nothing to do). */
   def compactRollup(): Int = mutate {
     ensureManifest(adopt = false)
+    heal()
     val fs = tableFs
-    val all = rollupDeltas(fs)
-    val cover = rollupCover(all)
-    // sweep crashed-compaction leftovers even when the chain is short
-    val redundant = all.filterNot(cover.contains)
-    assertLeaseHeld() // fence: chain deletes begin
-    redundant.foreach { case (p, _, _) => fs.delete(p, true) }
-    val n = cover.size
-    if (n > 1) {
-      val merged = spark.read.schema(rollupSchema)
+    rollupDeltas.compact(fs, rollupDeltas.links(fs), fenced)(_.size > 1) { (cover, p) =>
+      spark.read.schema(rollupSchema)
         .option("basePath", rollupPath)
-        .parquet(cover.map(_._1.toString): _*)
+        .parquet(cover.map(_.path.toString): _*)
         .groupBy(col("bucket_ts") +: tagCols.map(col) :+ col("rslot_ns"): _*)
         .agg(sum(col("cnt")).as("cnt"),
           sum(col("vsum")).as("vsum"),
@@ -1914,15 +1847,8 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
         .select(col("rslot_ns") +: tagCols.map(col) :+ col("cnt") :+ col("vsum") :+
           col("vmin") :+ col("vmax") :+ col("last_seq") :+ col("last_val") :+
           col("bucket_ts"): _*)
-      // the target name is fresh (cover.size > 1 means no single delta
-      // already spans the whole chain); publish first, then delete
-      val target = new Path(s"$rollupPath/delta=${cover.head._2}_${cover.last._3}")
-      Publish.dir(fs, target) { p =>
-        merged.write.mode(SaveMode.Overwrite).partitionBy("bucket_ts").parquet(p.toString)
-      }
-      cover.foreach { case (p, _, _) => if (p != target) fs.delete(p, true) }
-    }
-    if (n > 1) n else 0
+        .write.mode(SaveMode.Overwrite).partitionBy("bucket_ts").parquet(p.toString)
+    }.size
   }
 
   // ------------------------------------------------------------------
@@ -1946,9 +1872,9 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
   // The cell partitioning is the entire point: a probe statically
   // prunes to its nprobe cells' directories, so a search touches
   // nprobe/k of the stored bytes — the property that survives 100 TB.
-  // The seq-range chain (same greedy cover as the rollup) makes
-  // refresh exactly-once: fold rows (wm, cur], publish atomically,
-  // crash anywhere and the surviving dirs define the same watermark.
+  // Deltas and tombstones are seq-range chains ([[SeqChain]]), which
+  // makes refresh exactly-once; every call reads the index through
+  // one [[IndexSnapshot]].
   //
   // Correctness under overwrites (the LWW seam a secondary index must
   // handle): each delta holds its range's per-key winners, but a key
@@ -1966,12 +1892,11 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
   // still-current older version.
   //
   // Destructive verbs cascade (derived data must never serve rows the
-  // table no longer has): erase/removeBefore FILTER deltas+tombstones
-  // in place (a Publish swap, as erase does for rollup deltas);
-  // rollbackTo drops the suffix of the chain (by
-  // construction the affected deltas are a suffix, exactly the rollup
-  // cascade). The index is derived and rebuildable, so every heal
-  // path may fall back to fail-closed absence, never to stale serves.
+  // table no longer has): erase/removeBefore filter deltas and
+  // tombstones in place ([[SeqChain.rewrite]]), rollbackTo drops the
+  // chain suffix ([[SeqChain.dropAbove]]). The index is derived and
+  // rebuildable, so every heal path may fall back to fail-closed
+  // absence, never to stale serves.
   // ------------------------------------------------------------------
 
   private def vindexPath = s"${opts.tablePath}_vecindex"
@@ -2005,11 +1930,8 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
       StructField("slot_ns", LongType) :+
       StructField("win_seq", LongType))
 
-  private def vindexDeltas(fs: FileSystem): Seq[(Path, Long, Long)] =
-    seqRangeDirs(fs, new Path(vindexPath), "delta=")
-
-  private def vindexTombs(fs: FileSystem): Seq[(Path, Long, Long)] =
-    seqRangeDirs(fs, new Path(vindexPath), "tomb=")
+  private def vindexDeltas = SeqChain(new Path(vindexPath), "delta=", "vector index")
+  private def vindexTombs = SeqChain(new Path(vindexPath), "tomb=", "vector index")
 
   /** Stored-index manifest: coarse k plus the optional PQ tier. */
   private final case class VindexMeta(k: Int, pq: Option[PqParams])
@@ -2046,6 +1968,47 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
       else throw new IllegalStateException(
         s"corrupt _vindex_options at $vindexPath: partial pq_* keys")
     VindexMeta(k, pq)
+  }
+
+  /** The stored index as one call reads it: the manifest, the strict
+    * delta cover and the tombstones, each listed on first use and then
+    * held, so every stage of a call sees the same index state. */
+  private final class IndexSnapshot(fs: FileSystem) {
+    lazy val meta: VindexMeta = readVindexOptions(fs)
+    lazy val deltas: Seq[SeqChain.Link] = vindexDeltas.links(fs)
+    lazy val cover: Seq[SeqChain.Link] = vindexDeltas.cover(deltas)
+    lazy val tombs: Seq[SeqChain.Link] = vindexTombs.links(fs)
+
+    /** Highest seq the cover reaches; an index without deltas fails
+      * loudly. */
+    def wm: Long = cover.lastOption.map(_.hi).getOrElse(
+      throw new IllegalStateException(s"vector index at $vindexPath has no deltas — rebuild"))
+
+    /** Fail loudly on a manifest that does not validate or an index
+      * without deltas, before the call runs any job. */
+    def check(): Unit = { meta; wm }
+
+    /** The cover's inverted-file rows without the `delta` level, pruned
+      * to the `cids` cells' directories when given. */
+    def rows(cids: Option[Array[Long]] = None): DataFrame = {
+      val all = spark.read.schema(vindexSchema).option("basePath", vindexPath)
+        .parquet(cover.map(_.path.toString): _*)
+      cids.fold(all)(c => all.filter(col("cid").isin(c: _*))).drop("delta")
+    }
+
+    /** `cand` without the rows an applied tombstone supersedes; only
+      * tombstones the cover has reached apply (the refresh crash
+      * contract). */
+    def live(cand: DataFrame): DataFrame = {
+      val tombDirs = tombs.filter(_.hi <= wm).map(_.path.toString)
+      if (tombDirs.isEmpty) return cand
+      val tomb = spark.read.schema(vindexTombSchema).parquet(tombDirs: _*)
+        .groupBy((tagCols.map(col) :+ col("slot_ns")): _*)
+        .agg(max(col("win_seq")).as("__win_seq"))
+      cand.join(broadcast(tomb), tagCols :+ "slot_ns", "left_outer")
+        .filter(col("__win_seq").isNull || col("seq") >= col("__win_seq"))
+        .drop("__win_seq")
+    }
   }
 
   /** LWW winners of seq range (lo, hi] with payloads decoded to
@@ -2174,23 +2137,12 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     * LENIENT where the query paths are loud: a crash mid-swap leaves
     * a transient hole in the delta chain (healed by the next
     * maintenance verb), and a monitoring poll must keep reporting
-    * through it — so this walks the longest valid chain PREFIX
-    * instead of throwing, under-reporting the watermark (staleness
-    * reads HIGHER — the alarm-safe direction) until the heal runs. */
-  def vectorIndexWatermark(): Long = {
-    val fs = tableFs
-    if (!fs.exists(new Path(vindexPath))) return -1L
-    val sorted = vindexDeltas(fs).sortBy { case (_, lo, hi) => (lo, -hi) }
-    var covered = -1L
-    var broken = false
-    sorted.foreach { case (_, lo, hi) =>
-      if (!broken && hi > covered) {
-        if (lo != covered) broken = true // hole (crashed swap): stop at the prefix
-        else covered = hi
-      }
-    }
-    covered
-  }
+    * through it — so this reads the chain's valid prefix
+    * ([[SeqChain.validPrefix]]) instead of throwing, under-reporting
+    * the watermark (staleness reads HIGHER — the alarm-safe direction)
+    * until the heal runs. */
+  def vectorIndexWatermark(): Long =
+    vindexDeltas.validPrefix(tableFs).lastOption.map(_.hi).getOrElse(-1L)
 
   /** Incrementally fold writes above the index watermark into a new
     * delta against the STORED centroids (no re-training — assignment
@@ -2204,10 +2156,9 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     ensureManifest(adopt = false)
     val fs = tableFs
     heal()
-    val meta = readVindexOptions(fs)
-    val cover = rollupCover(vindexDeltas(fs))
-    val wm = cover.lastOption.map(_._3).getOrElse(
-      throw new IllegalStateException(s"vector index at $vindexPath has no deltas — rebuild"))
+    val index = new IndexSnapshot(fs)
+    val meta = index.meta
+    val wm = index.wm
     val cur = currentSeq()
     if (cur <= wm) return 0L
     val cent = spark.read.schema(vindexCentSchema).parquet(s"$vindexPath/centroids")
@@ -2262,8 +2213,7 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
         val stagedKeys = spark.read.schema(stagedKeySchema)
           .option("basePath", deltaStaging.toString)
           .parquet(deltaStaging.toString).drop("cid")
-        val tomb = spark.read.schema(vindexSchema).option("basePath", vindexPath)
-          .parquet(cover.map(_._1.toString): _*)
+        val tomb = index.rows()
           .filter(col("slot_ns") >= lo && col("slot_ns") <= hi)
           .select(keyNames.map(col): _*)
           .join(stagedKeys.select(keyNames.map(col): _*), keyNames, "left_semi")
@@ -2289,61 +2239,34 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
   }
 
   /** Fold the vector-index delta chain into ONE delta and materialize
-    * every applied tombstone — the [[compactRollup]] discipline for
-    * the ANN store: per key, only the max-seq row survives (exactly
-    * what the tombstone filter computes at probe time), written as
-    * `delta=<chainLo>_<chainHi>`; superseded deltas and all tombstone
-    * dirs the merge absorbed are then deleted. Probe cost drops to
-    * one dir listing and zero tombstone joins. Crash contract: the
-    * merged delta publishes FIRST — the greedy cover then prefers it
-    * (widest at the chain origin) and ignores the old deltas; stale
-    * tombstones left by a crash re-apply harmlessly (every surviving
-    * row already carries its key's max seq, so `seq >= win_seq`
-    * keeps it). Returns the number of deltas folded (0 = chain
-    * already compact). */
+    * every applied tombstone ([[SeqChain.compact]]): per key, only the
+    * max-seq row survives (exactly what the tombstone filter computes
+    * at probe time), then the tombstone dirs the merge absorbed are
+    * deleted. Probe cost drops to one dir listing and zero tombstone
+    * joins. A single delta with tombstones folds in place. Stale
+    * tombstones left by a crash before their deletes re-apply
+    * harmlessly (every surviving row already carries its key's max
+    * seq, so `seq >= win_seq` keeps it). Returns the number of deltas
+    * folded (0 = chain already compact). */
   def compactVectorIndex(): Int = mutate {
     ensureManifest(adopt = false)
     val fs = tableFs
     heal()
-    readVindexOptions(fs)
-    val all = vindexDeltas(fs)
-    val cover = rollupCover(all)
-    // fail fast BEFORE the dead-delta sweep: an empty cover (lost or
-    // damaged origin delta) with stray tombstone dirs would otherwise
-    // fall through the `cover.size <= 1 && tombs.isEmpty` guard and
-    // die on `cover.last` AFTER sweeping — same loud contract as
-    // refreshVectorIndex's missing-delta error
-    if (cover.isEmpty)
-      throw new IllegalStateException(
-        s"vector index at $vindexPath has no deltas — rebuild")
-    // sweep deltas a crashed earlier compaction left fully behind the
-    // cover (publish succeeded, deletes didn't): the greedy cover
-    // already ignores them, but every cascade that iterates RAW dirs
-    // (erase/removeBefore rewrites, rollback deletes) would keep
-    // paying for the dead trees — the compactRollup discipline
-    all.filterNot(cover.contains).foreach { case (p, _, _) => fs.delete(p, true) }
-    val tombs = vindexTombs(fs)
-    if (cover.size <= 1 && tombs.isEmpty) return 0
-    val hi = cover.last._3
-    val lo = cover.head._2
+    val index = new IndexSnapshot(fs)
+    index.check() // before any sweep
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy((tagCols.map(col) :+ col("slot_ns")): _*)
       .orderBy(col("seq").desc)
-    val merged = spark.read.schema(vindexSchema).option("basePath", vindexPath)
-      .parquet(cover.map(_._1.toString): _*).drop("delta")
-      .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
-      .select((col("slot_ns") +: tagCols.map(col)) :+ col("vec") :+
-        col("codes") :+ col("seq") :+ col("cid"): _*)
-    // with a single delta only tombstones are folded, and the merge
-    // replaces that delta (the target exists); otherwise the target is
-    // fresh and the merged cover's old deltas are deleted after it
-    val target = new Path(s"$vindexPath/delta=${lo}_$hi")
-    Publish.dir(fs, target, replace = true, fence = fenced) { p =>
-      merged.write.mode(SaveMode.Overwrite).partitionBy("cid").parquet(p.toString)
+    val folded = vindexDeltas.compact(fs, index.deltas, fenced)(
+        cover => cover.size > 1 || index.tombs.nonEmpty) { (_, p) =>
+      index.rows()
+        .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
+        .select((col("slot_ns") +: tagCols.map(col)) :+ col("vec") :+
+          col("codes") :+ col("seq") :+ col("cid"): _*)
+        .write.mode(SaveMode.Overwrite).partitionBy("cid").parquet(p.toString)
     }
-    cover.foreach { case (p, _, _) => if (p != target) fs.delete(p, true) }
-    tombs.foreach { case (p, _, thi) => if (thi <= hi) fs.delete(p, true) }
-    cover.size
+    folded.lastOption.foreach(c => index.tombs.foreach(t => if (t.hi <= c.hi) fs.delete(t.path, true)))
+    folded.size
   }
 
   /** The stored inverted file (cover of committed deltas) as
@@ -2354,16 +2277,14 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     * stale one in its old cell plus the winner), and a consumer
     * treating this as current index content would double-count
     * cells — so overwritten versions never surface here either. */
-  def vectorIndexInverted(): DataFrame = {
-    val fs = tableFs
-    readVindexOptions(fs)
-    val cover = rollupCover(vindexDeltas(fs))
-    if (cover.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+  def vectorIndexInverted(): DataFrame = inverted(new IndexSnapshot(tableFs))
+
+  private def inverted(index: IndexSnapshot): DataFrame = {
+    index.meta // validates the manifest; an empty cover reads as no rows
+    if (index.cover.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         StructType(vindexSchema.filterNot(_.name == "delta")))
-    val raw = spark.read.schema(vindexSchema).option("basePath", vindexPath)
-      .parquet(cover.map(_._1.toString): _*).drop("delta")
-    tombstoneFiltered(raw, fs, cover.last._3)
+    else index.live(index.rows())
   }
 
   /** Committed delta-chain length — the growth number a monitoring
@@ -2371,12 +2292,9 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     * lists and unions the whole cover, so a cover that keeps growing
     * under streaming refresh means [[compactVectorIndex]] (or
     * StreamingIngest's vectorIndexCompactEvery) is not being run.
-    * 0 when no index exists. */
-  def vectorIndexCoverSize(): Int = {
-    val fs = tableFs
-    if (!fs.exists(new Path(vindexPath))) 0
-    else rollupCover(vindexDeltas(fs)).size
-  }
+    * 0 when no index exists. Lenient like the watermark: through a
+    * crashed swap's hole it counts the chain's valid prefix. */
+  def vectorIndexCoverSize(): Int = vindexDeltas.validPrefix(tableFs).size
 
   /** The stored coarse centroids (cid, cv). */
   def vectorIndexCentroids(): DataFrame = {
@@ -2399,12 +2317,8 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     import graft.functions.VectorFunctions.cosine
     require(nprobe > 0 && topk > 0, s"annSearch: nprobe=$nprobe topk=$topk")
     ensureManifest(adopt = false)
-    val fs = tableFs
-    readVindexOptions(fs)
-    val cover = rollupCover(vindexDeltas(fs))
-    if (cover.isEmpty)
-      throw new IllegalStateException(s"vector index at $vindexPath has no deltas — rebuild")
-    val wmCover = cover.last._3
+    val index = new IndexSnapshot(tableFs)
+    index.check()
     val cent = spark.read.schema(vindexCentSchema).parquet(s"$vindexPath/centroids")
     // r14: nearest-nprobe cells per query via the zero-shuffle Ivf
     // argmin kernel (bit-identical (dist, cid) order), not a per-qid
@@ -2412,11 +2326,7 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     val probed = probeCells(queries, cent, nprobe).persist()
     try {
       val cids = probed.select(col("cid")).distinct().collect().map(_.getLong(0))
-      val inv = spark.read.schema(vindexSchema).option("basePath", vindexPath)
-        .parquet(cover.map(_._1.toString): _*)
-        .filter(col("cid").isin(cids: _*)) // static partition prune
-        .drop("delta", "codes")
-      val live = tombstoneFiltered(inv, fs, wmCover)
+      val live = index.live(index.rows(Some(cids)).drop("codes"))
       // r14: per-query top-k via the k-bounded TopK aggregator (map-
       // side combine, ≤ k rows per query per partition cross the
       // shuffle) instead of a qid-partitioned window whose ONE task
@@ -2460,20 +2370,6 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
         col("__s.cid").as("cid"): _*)
   }
 
-  /** Drop candidates an applied tombstone supersedes — tomb ranges
-    * the cover has reached only (see the refresh crash contract). */
-  private def tombstoneFiltered(cand: DataFrame, fs: FileSystem,
-      wmCover: Long): DataFrame = {
-    val tombDirs = vindexTombs(fs).filter(_._3 <= wmCover).map(_._1.toString)
-    if (tombDirs.isEmpty) return cand
-    val tomb = spark.read.schema(vindexTombSchema).parquet(tombDirs: _*)
-      .groupBy((tagCols.map(col) :+ col("slot_ns")): _*)
-      .agg(max(col("win_seq")).as("__win_seq"))
-    cand.join(broadcast(tomb), tagCols :+ "slot_ns", "left_outer")
-      .filter(col("__win_seq").isNull || col("seq") >= col("__win_seq"))
-      .drop("__win_seq")
-  }
-
   /** The stored PQ codebooks (sub, cid, cv); fails loudly when the
     * index has no PQ tier. */
   def vectorIndexPqBooks(): DataFrame = {
@@ -2502,34 +2398,28 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     * Ties break by (tags, slot). Output: (qid, rk, tag0…, slot_ns,
     * adc) — adc ascending is the approximate squared L2. */
   def annSearchAdc(queries: DataFrame, nprobe: Int, topk: Int): DataFrame =
-    annSearchAdcCore(queries, nprobe, topk).drop("cid")
+    annSearchAdcCore(queries, nprobe, topk, new IndexSnapshot(tableFs)).drop("cid")
 
-  /** [[annSearchAdc]] plus the winning candidate's cell id — kept
-    * private so [[annSearchRerank]] can cid-prune its exact-vector
-    * fetch without re-probing the centroids. */
-  private def annSearchAdcCore(queries: DataFrame, nprobe: Int, topk: Int): DataFrame = {
+  /** [[annSearchAdc]] over `index` plus the winning candidate's cell
+    * id — kept private so [[annSearchRerank]] can cid-prune its
+    * exact-vector fetch of the same index state without re-probing
+    * the centroids. */
+  private def annSearchAdcCore(queries: DataFrame, nprobe: Int, topk: Int,
+      index: IndexSnapshot): DataFrame = {
     import graft.functions.VectorFunctions.l2sq
     require(nprobe > 0 && topk > 0, s"annSearchAdc: nprobe=$nprobe topk=$topk")
     ensureManifest(adopt = false)
-    val fs = tableFs
-    val meta = readVindexOptions(fs)
-    if (meta.pq.isEmpty)
+    if (index.meta.pq.isEmpty)
       throw new IllegalStateException(
         s"vector index at $vindexPath has no PQ tier — rebuild with PqParams")
-    val cover = rollupCover(vindexDeltas(fs))
-    if (cover.isEmpty)
-      throw new IllegalStateException(s"vector index at $vindexPath has no deltas — rebuild")
-    val wmCover = cover.last._3
+    index.check()
     val cent = spark.read.schema(vindexCentSchema).parquet(s"$vindexPath/centroids")
     val books = spark.read.schema(vindexBookSchema).parquet(s"$vindexPath/pq_books")
     val probed = probeCells(queries, cent, nprobe).persist()
     try {
       val cids = probed.select(col("cid")).distinct().collect().map(_.getLong(0))
-      val inv = spark.read.schema(vindexSchema).option("basePath", vindexPath)
-        .parquet(cover.map(_._1.toString): _*)
-        .filter(col("cid").isin(cids: _*)) // static partition prune
-        .drop("delta", "vec") // codes only — the column-pruned scan
-      val live = tombstoneFiltered(inv, fs, wmCover)
+      // codes only — the column-pruned scan
+      val live = index.live(index.rows(Some(cids)).drop("vec"))
       // r14: codes decode IN the candidate row against a 1-row
       // codebook broadcast — zip_with pairs each code with its sub's
       // entries (both arrays are sub-ascending), flatten concatenates
@@ -2572,14 +2462,18 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     * for reading dim·4 bytes on shortlist rows instead of every
     * probed row. Output: (qid, rk, tags…, slot_ns, cos). */
   def annSearchRerank(queries: DataFrame, nprobe: Int, topk: Int,
-      shortlist: Int): DataFrame = {
+      shortlist: Int): DataFrame =
+    rerank(queries, nprobe, topk, shortlist, new IndexSnapshot(tableFs))
+
+  /** [[annSearchRerank]] over `index`: both stages read its state. */
+  private def rerank(queries: DataFrame, nprobe: Int, topk: Int,
+      shortlist: Int, index: IndexSnapshot): DataFrame = {
     import graft.functions.VectorFunctions.cosine
     require(shortlist >= topk,
       s"annSearchRerank: shortlist=$shortlist must be >= topk=$topk")
-    val fs = tableFs
     val keyNames = tagCols :+ "slot_ns"
     // stage 1: code-only ADC shortlist (tombstone-filtered, cid-pruned)
-    val short = annSearchAdcCore(queries, nprobe, topk = shortlist)
+    val short = annSearchAdcCore(queries, nprobe, topk = shortlist, index)
       .select((col("qid") +: keyNames.map(col)) :+ col("cid"): _*)
       .persist()
     try {
@@ -2598,17 +2492,12 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
       val rng = short.agg(collect_set(col("cid")),
         min(col("slot_ns")), max(col("slot_ns"))).head()
       val cids = rng.getSeq[Long](0).toArray
-      val cover = rollupCover(vindexDeltas(fs))
-      val wmCover = cover.last._3
-      val scan0 = spark.read.schema(vindexSchema).option("basePath", vindexPath)
-        .parquet(cover.map(_._1.toString): _*)
-        .filter(col("cid").isin(cids: _*)) // static partition prune
-        .drop("delta", "codes")
+      val scan0 = index.rows(Some(cids)).drop("codes")
       val scan = // empty shortlist: no range to push, result is empty anyway
         if (rng.isNullAt(1)) scan0.filter(lit(false))
         else scan0.filter(col("slot_ns") >= rng.getLong(1) &&
           col("slot_ns") <= rng.getLong(2)) // static row-group prune, 2 literals
-      val exact = tombstoneFiltered(scan, fs, wmCover)
+      val exact = index.live(scan)
         .join(broadcast(short.select(keyNames.map(col): _*).distinct()),
           keyNames, "left_semi")
         .select((keyNames.map(col) :+ col("vec")): _*)
@@ -2681,6 +2570,7 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     require(settings.forall(_._1 > 0),
       s"annRecallReport: nprobe must be positive in every setting ($settings)")
     ensureManifest(adopt = false)
+    val index = new IndexSnapshot(tableFs)
     val q = queries.select(col("qid"), col("qv")).persist()
     // r14: ground truth keeps its per-query top-k with the k-bounded
     // TopK aggregator (same (cos desc, tags, slot) total order as the
@@ -2688,7 +2578,7 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
     // design, and the window funneled every (query × corpus) pair of
     // a query through ONE task.
     val exact = topCands(
-      vectorIndexInverted().drop("codes", "cid", "seq")
+      inverted(index).drop("codes", "cid", "seq")
         .crossJoin(broadcast(q))
         .withColumn("__score", cosine(col("qv"), col("vec")))
         .withColumn("cid", lit(-1L)), // payload unused here
@@ -2713,13 +2603,7 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
       val ivfHits: Map[Int, Long] =
         if (ivfNps.isEmpty) Map.empty
         else {
-          val fs = tableFs
-          readVindexOptions(fs)
-          val cover = rollupCover(vindexDeltas(fs))
-          if (cover.isEmpty)
-            throw new IllegalStateException(
-              s"vector index at $vindexPath has no deltas — rebuild")
-          val wmCover = cover.last._3
+          index.check()
           val cent = spark.read.schema(vindexCentSchema).parquet(s"$vindexPath/centroids")
           val npMax = ivfNps.max
           val probed = q
@@ -2730,12 +2614,8 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
             .persist()
           try {
             val cids = probed.select(col("cid")).distinct().collect().map(_.getLong(0))
-            val inv = spark.read.schema(vindexSchema).option("basePath", vindexPath)
-              .parquet(cover.map(_._1.toString): _*)
-              .filter(col("cid").isin(cids: _*)) // static partition prune
-              .drop("delta", "codes")
             val cand = probed
-              .join(tombstoneFiltered(inv, fs, wmCover), Seq("cid"))
+              .join(index.live(index.rows(Some(cids)).drop("codes")), Seq("cid"))
               .withColumn("__score", cosine(col("qv"), col("vec")))
               .persist()
             try ivfNps.map { np =>
@@ -2749,7 +2629,7 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
       val rows = settings.map { case (nprobe, shortlist) =>
         val hits =
           if (shortlist > 0)
-            annSearchRerank(q, nprobe, topk, shortlist)
+            rerank(q, nprobe, topk, shortlist, index)
               .join(exact, keyCols, "left_semi").count()
           else ivfHits(nprobe)
         (if (shortlist > 0) "rerank" else "ivf", nprobe, shortlist,
@@ -2819,44 +2699,22 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
   }
 
   /** Cascade for erase/removeBefore: rewrite every index delta and
-    * tombstone dir dropping rows where `doomed` holds, each by a
-    * [[Publish]] swap. Seq-range NAMES are preserved: the folded
-    * ranges stay true (the erased rows simply no longer contribute),
-    * so the cover chain never breaks. No-op when no index exists. */
+    * tombstone dir dropping rows where `doomed` holds
+    * ([[SeqChain.rewrite]]). No-op when no index exists. */
   private def filterVectorIndex(doomed: DataFrame => Column): Unit = {
     val fs = tableFs
-    if (!fs.exists(new Path(vindexPath))) return
-    def rewrite(dir: Path, schema: StructType, partitioned: Boolean): Unit = {
-      val read =
-        if (partitioned)
-          spark.read.schema(StructType(schema.filterNot(_.name == "delta")))
-            .parquet(dir.toString)
-        else spark.read.schema(schema).parquet(dir.toString)
-      if (read.filter(doomed(read)).isEmpty) return // untouched dirs cost one scan, no rewrite
-      Publish.dir(fs, dir, replace = true, fence = fenced) { p =>
+    def edit(schema: StructType, partitionBy: Option[String])(
+        link: SeqChain.Link): Option[Path => Unit] = {
+      val read = spark.read.schema(schema).parquet(link.path.toString)
+      if (read.filter(doomed(read)).isEmpty) None // untouched dirs cost one scan, no rewrite
+      else Some { p =>
         val w = read.filter(!doomed(read)).write.mode(SaveMode.Overwrite)
-        (if (partitioned) w.partitionBy("cid") else w).parquet(p.toString)
+        partitionBy.fold(w)(w.partitionBy(_)).parquet(p.toString)
       }
     }
-    vindexDeltas(fs).foreach { case (dir, _, _) =>
-      rewrite(dir, vindexSchema, partitioned = true)
-    }
-    vindexTombs(fs).foreach { case (dir, _, _) =>
-      rewrite(dir, vindexTombSchema, partitioned = false)
-    }
-  }
-
-  /** Cascade for rollbackTo: drop every index delta and tombstone
-    * whose folded range reaches past the watermark — a SUFFIX of the
-    * chain by construction, so the cover stays valid and the next
-    * refresh re-folds the surviving rows from the cut point (the
-    * rollup-cascade argument verbatim). */
-  private def rollbackVectorIndex(asOfSeq: Long): Unit = {
-    val fs = tableFs
-    if (!fs.exists(new Path(vindexPath))) return
-    (vindexDeltas(fs) ++ vindexTombs(fs)).foreach { case (dir, _, hi) =>
-      if (hi > asOfSeq) fs.delete(dir, true)
-    }
+    vindexDeltas.rewrite(fs, fenced)(
+      edit(StructType(vindexSchema.filterNot(_.name == "delta")), Some("cid")))
+    vindexTombs.rewrite(fs, fenced)(edit(vindexTombSchema, None))
   }
 
   /** Close (kdb.go:14; dbase/dbase.go:366-384): the reference flushes
@@ -2869,7 +2727,7 @@ final class Engine(spark: SparkSession, val opts: EngineOptions, clock: Clock = 
   /** Buckets currently on disk (base timestamps, ascending, distinct
     * across publish batches). */
   def bucketsOnDisk(): Seq[Long] = {
-    val fs = FileSystem.get(new java.net.URI(opts.dataDir), spark.sparkContext.hadoopConfiguration)
+    val fs = tableFs
     val root = new Path(opts.tablePath)
     if (!fs.exists(root)) Seq.empty
     else fs.listStatus(root).toSeq

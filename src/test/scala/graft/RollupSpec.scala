@@ -130,6 +130,22 @@ class RollupSpec extends SparkTestBase {
     assert(e.refreshRollup(100L) === 1L)
   }
 
+  test("rollupRemoveBefore heals first: a delta a crashed swap parked in trash loses its old buckets too") {
+    val (e, clock) = mkEngine()
+    e.putDoubles(Seq((10000L, T, 1.0), (11000L, T, 2.0)))
+    e.refreshRollup(100L)
+    val root = new Path(s"${e.opts.tablePath}_rollup")
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val delta = fs.listStatus(root).map(_.getPath).filter(_.getName.startsWith("delta=")).head
+    // the crash window of an erase swap: the delta sits in trash
+    assert(fs.rename(delta, Publish.trashPath(delta)))
+    clock.goto(13999L)
+    e.rollupRemoveBefore(11000L)
+    e.heal()
+    assert(rows(e.rollup(10000L, 11100L, T, 100L)) === Seq((11000L, 1L, 2.0, 2.0, 2.0, 2.0, 2.0)),
+      "a bucket retention dropped must not come back with the healed delta")
+  }
+
   test("property: rollup output is invariant to how writes are split across refreshes") {
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed

@@ -463,6 +463,53 @@ class VectorIndexSpec extends SparkTestBase {
     assert(ex.getMessage.contains("no deltas"), ex.getMessage)
   }
 
+  test("a hole in the delta chain: monitoring reports the valid prefix, probes fail naming the index and seq") {
+    val (e, _) = mkEngine()
+    seed(e)
+    e.buildVectorIndex(k = 2, iters = 1)
+    val wm0 = e.vectorIndexWatermark()
+    e.put(Seq(Point(11010L, Seq("a3"), vec(1f, 0f, 0f, 0f))))
+    e.refreshVectorIndex()
+    e.put(Seq(Point(11020L, Seq("b3"), vec(0f, 1f, 0f, 0f))))
+    e.refreshVectorIndex()
+    val root = new org.apache.hadoop.fs.Path(s"${e.opts.tablePath}_vecindex")
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val middle = fs.listStatus(root).map(_.getPath)
+      .filter(_.getName.startsWith(s"delta=${wm0}_")).head
+    // the crash window of a cascade swap: the middle delta sits in trash
+    assert(fs.rename(middle, Publish.trashPath(middle)))
+    assert(e.vectorIndexWatermark() === wm0)
+    assert(e.vectorIndexCoverSize() === 1)
+    val ex = intercept[IllegalStateException](
+      e.annSearch(queries(1L -> Seq(1f, 0f, 0f, 0f)), 1, 3))
+    assert(ex.getMessage.contains("vector index") && ex.getMessage.contains(s"at seq $wm0"),
+      ex.getMessage)
+  }
+
+  test("compactVectorIndex over one delta and a crash's leftover tombstone keeps the delta") {
+    val (e, _) = mkEngine()
+    seed(e)
+    e.buildVectorIndex(k = 2, iters = 1)
+    e.put(Seq(Point(11000L, Seq("a0"), vec(0f, 1f, 0f, 0f)))) // cross-cell overwrite
+    e.refreshVectorIndex()
+    val root = new org.apache.hadoop.fs.Path(s"${e.opts.tablePath}_vecindex")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = root.getFileSystem(conf)
+    def dirs(prefix: String) =
+      fs.listStatus(root).map(_.getPath).filter(_.getName.startsWith(prefix)).toSeq
+    val tomb = dirs("tomb=").head
+    val stash = new org.apache.hadoop.fs.Path(root, ".stash")
+    org.apache.hadoop.fs.FileUtil.copy(fs, tomb, fs, stash, false, conf)
+    val q = queries(1L -> Seq(0f, 1f, 0f, 0f))
+    val before = topTags(e.annSearch(q, 2, 6))
+    assert(e.compactVectorIndex() === 2)
+    // a crash between the merged publish and the tombstone deletes
+    assert(fs.rename(stash, tomb))
+    assert(e.compactVectorIndex() === 1)
+    assert(dirs("delta=").size === 1 && dirs("tomb=").isEmpty)
+    assert(topTags(e.annSearch(q, 2, 6)) === before)
+  }
+
   test("floats_from_payload round-trips encode bit-exactly and rejects misaligned payloads") {
     val xs = Seq(1.5f, -0.25f, Float.MinPositiveValue, 3.4e38f)
     val decoded = FloatsFromPayload.decode(FloatsFromPayload.encode(xs))

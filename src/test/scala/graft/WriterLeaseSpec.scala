@@ -121,6 +121,34 @@ class WriterLeaseSpec extends SparkTestBase {
     assert(!leaseFile(opts).exists(), "a lost hold must not re-create the lease")
   }
 
+  test("rollupRemoveBefore refuses once its lease is lost, before deleting anything") {
+    val opts = mkOpts()
+    var e: Engine = null
+    var stealOnRead = false
+    // reading the time inside the verb is the moment another writer
+    // steals the lease and our heartbeat notices
+    val clock = new Clock {
+      @volatile var now = 11999L
+      def nowNs: Long = {
+        if (stealOnRead) {
+          stealOnRead = false
+          plantLease(opts, "new-holder", System.currentTimeMillis())
+          e.leaseHeartbeatOnce()
+        }
+        now
+      }
+    }
+    e = new Engine(spark, opts, clock)
+    e.putDoubles(Seq((10000L, Seq("a"), 1.0), (11000L, Seq("a"), 2.0)))
+    e.refreshRollup(100L)
+    clock.now = 12999L // bucket 10000 leaves the hot window
+    stealOnRead = true
+    val ex = intercept[IllegalStateException](e.rollupRemoveBefore(11000L))
+    assert(ex.getMessage.startsWith(EngineErrors.WriterConflict), ex.getMessage)
+    assert(e.rollup(10000L, 11100L, Seq("a"), 100L).count() === 2L,
+      "the refused verb must leave every rollup bucket in place")
+  }
+
   test("an unreadable lease file fails CLOSED (treated fresh), never stolen") {
     val opts = mkOpts()
     val clock = new TestClock(11999L)
