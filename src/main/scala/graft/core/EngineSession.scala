@@ -28,6 +28,19 @@ import org.apache.spark.sql.SparkSession
   *    Catalyst's `CodeGenerator` first loads: a session the caller
   *    builds without this method (a plain `SparkSession.builder()`)
   *    keeps Spark's 100 entries — still correct, only slower.
+  *  - `file:` through [[NoForkLocalFileSystem]] and its `FileContext`
+  *    twin [[NoForkLocalFs]]. Without Hadoop's native library, stock
+  *    `RawLocalFileSystem` forks `chmod` for every file and directory
+  *    it creates (each parquet part, its `.crc`, each `bucket_ts=`
+  *    dir, each `Publish` staging dir) and `readlink` for every
+  *    `FileContext` rename (each streaming offset and commit log
+  *    entry): one perfbench `--seed 7 --seconds 20` run started 1821
+  *    processes on `ingest` and 1798 on `query_heavy`, 4 each with
+  *    these classes (Hadoop's one-time `setsid` probe, Spark's
+  *    `getconf` and shutdown `rm`). Modes, `.crc` sidecars and link
+  *    answers are the stock ones (`LocalFsSpec`). Other schemes
+  *    (HDFS, S3) are untouched; a session built without this method
+  *    keeps Hadoop's forking local FS — still correct, only slower.
   */
 object EngineSession {
 
@@ -40,6 +53,8 @@ object EngineSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.codegen.cache.maxEntries", "1024")
+      .config("spark.hadoop.fs.file.impl", classOf[NoForkLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NoForkLocalFs].getName)
 
   /** Local session for tools and tests. */
   def local(cores: Int, extra: Map[String, String] = Map.empty): SparkSession = {
